@@ -85,9 +85,9 @@ def main() -> int:
     ap.add_argument(
         "--canonicalize",
         action="store_true",
-        help="after extraction, run first-token clustering + connected "
-        "components over mention surfaces and write the canonical entity "
-        "table (entities_canonical/) alongside edges/",
+        help="after extraction, cluster edge surfaces by alias-ladder "
+        "equivalence and write the canonical entity table "
+        "(entities_canonical/) alongside edges/",
     )
     args = ap.parse_args()
 
@@ -195,7 +195,8 @@ def main() -> int:
     }
 
     if args.canonicalize:
-        # the full north-star tail: alias-ladder clustering + join-based CC.
+        # the full north-star tail: alias-ladder clustering folded into one
+        # row per cluster (operators/canonicalize.py:canonical_entity_table).
         # NOTE deliberate deviation from reference G5 semantics here: the
         # reference's first-token ent_dict is PER-EXAMPLE
         # (build_dataset.py:219-246); corpus-globally that key over-merges
@@ -217,8 +218,10 @@ def main() -> int:
             surfaces.select(F.regexp_replace("surface", "_", " ").alias("surface")),
             clusterer=alias_clusters,
         )
-        canonical.write.mode("overwrite").parquet(f"{args.output}/entities_canonical")
-        summary["canonical_entities"] = canonical.count()
+        canonical_dir = f"{args.output}/entities_canonical"
+        canonical.write.mode("overwrite").parquet(canonical_dir)
+        # count the written table: canonical.count() would re-run the tail
+        summary["canonical_entities"] = spark.read.parquet(canonical_dir).count()
 
     if args.curate:
         # the data_curation_e2e capstone as a production stage: same

@@ -1,23 +1,22 @@
-"""Surface-form canonicalization: first-token clustering + join-based CC.
+"""Surface-form canonicalization (clustering) + join-based CC.
 
-Two layers, mirroring SURVEY.md G5/J7:
+Mirroring SURVEY.md G5/J7:
 
 1. :func:`first_token_clusters` — the reference's exact 1-hop
    semantics (`build_dataset.py:226-246`): group entity surfaces by
    first token, sort the variant list (`v.sort()` at `:243`), rewrite
-   every variant to the representative ``v[0]``.
+   every variant to the representative ``v[0]``;
+   :func:`alias_clusters` is its corpus-global sibling.
 
 2. :func:`connected_components` — the generalized transitive closure
-   the north_rule demands: alternating large-star / small-star
-   DataFrame joins (Kiveris et al., "Connected Components in
-   MapReduce"), converging in O(log n) rounds. GraphFrames is absent
-   in this environment, and an explicit join formulation lets us salt
-   the skewed head-entity keys; AQE skew-join handles the residual.
+   for graphs that are NOT already partitions (curation's near-dup
+   pair graph): alternating large-star / small-star DataFrame joins
+   (Kiveris et al., "Connected Components in MapReduce"), converging
+   in O(log n) rounds. GraphFrames is absent in this environment, and
+   an explicit join formulation lets us salt the skewed head keys; AQE
+   skew-join handles the residual.
 
-Scale notes: each round is two shuffles on (node) — the *only*
-shuffle-heavy stage in the whole pipeline. The first-token pass runs
-first because it shrinks components by ~|aliases/entity|, which is
-what keeps star-join fan-in bounded at Common-Crawl scale.
+Scale notes: each CC round is two shuffles on (node).
 """
 
 from __future__ import annotations
@@ -342,50 +341,31 @@ def alias_clusters(surfaces: DataFrame, surface_col: str = "surface") -> DataFra
     )
 
 
-def canonical_entities(triples: DataFrame) -> DataFrame:
-    """Canonical entity table from extracted triples: cluster subject and
-    object surfaces (first-token pass) and pick the sorted representative.
-
-    Output: (surface, canonical_surface) for every distinct surface seen.
-    """
-    surfaces = triples.select(F.col("subj_surface").alias("surface")).unionByName(
-        triples.select(F.col("obj_surface").alias("surface"))
-    )
-    return first_token_clusters(surfaces)
-
-
 def canonical_entity_table(surfaces: DataFrame, clusterer=None) -> DataFrame:
-    """The full canonicalization tail (north_rule): a clustering pass
-    shrinks the graph, then join-based CC resolves transitive
-    surface↔representative chains; singleton clusters (whose only CC
-    edge would be a self-loop) survive via left-join+coalesce.
+    """The canonicalization tail (north_rule): cluster, then fold each
+    cluster into one row with a single aggregate.
+
+    Clusterer contract: (surface, rep) is a PARTITION — every surface
+    maps to one rep, and each rep is a member that maps to itself (both
+    clusterers here pick the group's min surface). No transitive chains
+    remain, so no CC pass is needed and a 64-bit hash collision cannot
+    merge unrelated clusters.
 
     `clusterer` defaults to :func:`first_token_clusters` (G5 reference
     semantics — right for per-example scopes); corpus-global callers
     should pass :func:`alias_clusters` to avoid merging distinct
     entities that merely share a head token (see its docstring).
 
-    surfaces: one column ``surface``. Output:
-    (component, canonical, surfaces: array<string>).
+    surfaces: one column ``surface``. Output: (component = min
+    ``abs(xxhash64)`` over members, canonical, surfaces: array<string>).
     """
     clusters = (clusterer or first_token_clusters)(surfaces)
-    nodes = (
-        clusters.select("surface")
-        .unionByName(clusters.select(F.col("rep").alias("surface")))
-        .distinct()
-        .withColumn("node", F.abs(F.xxhash64("surface")))
-    )
-    cc_edges = clusters.select(
-        F.abs(F.xxhash64("surface")).alias("src"),
-        F.abs(F.xxhash64("rep")).alias("dst"),
-    )
-    comp = connected_components(cc_edges, max_iter=8)
     return (
-        nodes.join(comp, "node", "left")
-        .withColumn("component", F.coalesce("component", "node"))
-        .groupBy("component")
+        clusters.groupBy("rep")
         .agg(
+            F.min(F.abs(F.xxhash64("surface"))).alias("component"),
             F.min("surface").alias("canonical"),
             F.sort_array(F.collect_set("surface")).alias("surfaces"),
         )
+        .drop("rep")
     )

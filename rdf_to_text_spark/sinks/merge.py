@@ -17,25 +17,30 @@ is abstracted behind one module with two equivalent implementations:
 
 Resumability protocol (reference analog: best-checkpoint save/restore,
 `main_PG.py:210-218`; skip-counter lineage, `build_dataset.py:269-272`):
-  1. the driver splits work into chunks (e.g. Iceberg partitions or
-     doc_id ranges);
-  2. each completed chunk commits its triples *and* a lineage row
-     ``(chunk_id, n_pages, n_triples, n_dropped, wall_sec)`` in the
-     same write;
-  3. on restart, the job anti-joins pending chunks against committed
-     lineage → only unfinished chunks re-run; re-running a finished
-     chunk is a no-op overwrite of identical data.
+  1. the driver stages the pages of uncommitted chunks once, as parquet
+     partitioned by ``chunk_id = pmod(doc_id, n)`` under ``base/_staging``;
+  2. each chunk job reads its own partition and commits its triples
+     *and* a lineage row ``(chunk_id, n_pages, n_triples, n_dropped,
+     wall_sec)`` in the same write;
+  3. on restart, committed chunks are left out of staging → only
+     unfinished chunks re-run; re-running a finished chunk is a no-op
+     overwrite of identical data.
 """
 
 from __future__ import annotations
 
-import os
 import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 LINEAGE_SCHEMA = "chunk_id long, n_pages long, n_triples long, n_dropped long, wall_sec double"
+
+
+def _hadoop_path(spark: SparkSession, path: str):
+    """(FileSystem, Path) for `path`, for any scheme Spark can read."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 
 def iceberg_merge_sql(target: str = "kg.edges", n_buckets: int = 256) -> str:
@@ -68,15 +73,12 @@ class BucketedParquetMerge:
 
     # ---------------------------------------------------------- lineage
     def committed_chunks(self) -> DataFrame:
-        path = f"{self.base}/lineage"
-        try:
-            return self.spark.read.parquet(path).select("chunk_id").distinct()
-        except Exception:
+        """Only a missing lineage dir means "none committed"; any other
+        read error propagates rather than re-running every chunk."""
+        fs, path = _hadoop_path(self.spark, f"{self.base}/lineage")
+        if not fs.exists(path):
             return self.spark.createDataFrame([], "chunk_id long")
-
-    def pending_chunks(self, chunks: DataFrame) -> DataFrame:
-        """Anti-join planned chunks against committed lineage (resume)."""
-        return chunks.join(self.committed_chunks(), "chunk_id", "left_anti")
+        return self.lineage().select("chunk_id").distinct()
 
     # ------------------------------------------------------------ write
     def write_chunk(
@@ -140,8 +142,14 @@ def run_resumable(
     n_chunks: int = 4,
     extract=None,
 ) -> list[dict]:
-    """Chunked, resumable extraction job: doc_id-range chunks → extract →
+    """Chunked, resumable extraction job: pmod(doc_id) chunks → extract →
     commit (triples + lineage). Already-committed chunks are skipped.
+
+    Stage once: pending pages are written as parquet partitioned by
+    ``chunk_id`` under ``{base}/_staging`` (an observe on that write
+    yields the planned ids) and each chunk job reads only its
+    ``chunk_id=<k>`` partition, so the plan of `pages` runs once per
+    call. ``_staging`` is removed at the start and in a ``finally``.
 
     CONTRACT for a custom `extract` (ADVICE r2): it must be a pure plan
     transformation — no intermediate actions (count/isEmpty/cache-warm
@@ -150,10 +158,10 @@ def run_resumable(
     early action inside `extract` would freeze `n_pages` from that
     partial job instead of the chunk write, silently corrupting lineage
     rows. Trade-off, also deliberate: the observe node sits above the
-    page scan, which blocks pushing a lang/category filter INSIDE
-    `extract` down into the scan (observe is a pushdown barrier) — put
-    input filters on `pages` before calling run_resumable so n_pages
-    counts exactly what the chunk processed.
+    staged-partition scan, which blocks pushing a lang/category filter
+    INSIDE `extract` down into the scan (observe is a pushdown barrier)
+    — put input filters on `pages` before calling run_resumable so
+    n_pages counts exactly what the chunk processed.
     """
     from ..pipeline import extract_pipeline
 
@@ -161,32 +169,43 @@ def run_resumable(
 
     extract = extract or (lambda df: extract_pipeline(df, use_html=True))
     sink = BucketedParquetMerge(spark, base)
-    chunked = pages.withColumn("chunk_id", F.pmod(F.col("doc_id"), F.lit(n_chunks)))
-    planned = chunked.select("chunk_id").distinct()
-    todo = sorted(r.chunk_id for r in sink.pending_chunks(planned).collect())
+    done = [r.chunk_id for r in sink.committed_chunks().collect()]
+    staging = f"{base}/_staging"
+    fs, staging_path = _hadoop_path(spark, staging)
+    fs.delete(staging_path, True)
+    try:
+        planned = Observation("planned_chunks")
+        (
+            pages.withColumn("chunk_id", F.pmod(F.col("doc_id"), F.lit(n_chunks)))
+            .filter(~F.col("chunk_id").isin(done))
+            .observe(planned, F.collect_set("chunk_id").alias("chunk_ids"))
+            .write.partitionBy("chunk_id")
+            .parquet(staging)
+        )
+        todo = sorted(planned.get["chunk_ids"])
 
-    def _one(cid: int) -> dict:
-        spark.sparkContext.setJobDescription(f"resumable chunk {cid}")
-        part = chunked.filter(F.col("chunk_id") == cid).drop("chunk_id")
-        # n_pages rides the same single pass as the chunk write: an
-        # observe node below the extraction counts the chunk's input
-        # rows while they stream through — no second scan.
-        pages_obs = Observation(f"chunk_{cid}_pages")
-        part = part.observe(pages_obs, F.count(F.lit(1)).alias("n_pages"))
-        triples = extract(part)
-        return sink.write_chunk(cid, triples, pages_obs)
+        def _one(cid: int) -> dict:
+            spark.sparkContext.setJobDescription(f"resumable chunk {cid}")
+            # n_pages rides the same single pass as the chunk write: an
+            # observe node below the extraction counts the chunk's input
+            # rows while they stream through — no second scan.
+            pages_obs = Observation(f"chunk_{cid}_pages")
+            # the known schema spares a footer-inference job per chunk
+            part = spark.read.schema(pages.schema).parquet(f"{staging}/chunk_id={cid}")
+            part = part.observe(pages_obs, F.count(F.lit(1)).alias("n_pages"))
+            return sink.write_chunk(cid, extract(part), pages_obs)
 
-    # Overlap the independent chunk jobs (guide §2.6): each chunk is a
-    # separate scan→extract→write action whose tail would otherwise
-    # leave the cluster idle; dynamic partition overwrite stages every
-    # job under its own .spark-staging-<jobId> dir and each chunk
-    # commits disjoint chunk=<id>/ partition dirs, so concurrent chunk
-    # writes never touch the same destination. Job descriptions are
-    # thread-local, so the UI labels each chunk correctly. Result order
-    # stays chunk-id-sorted (pool.map preserves input order).
-    if len(todo) > 1:
-        with ThreadPoolExecutor(max_workers=min(4, len(todo))) as pool:
-            results = list(pool.map(_one, todo))
-    else:
-        results = [_one(cid) for cid in todo]
-    return results
+        # Overlap the independent chunk jobs (guide §2.6): each chunk is a
+        # separate scan→extract→write action whose tail would otherwise
+        # leave the cluster idle; dynamic partition overwrite stages every
+        # job under its own .spark-staging-<jobId> dir and each chunk
+        # commits disjoint chunk=<id>/ partition dirs, so concurrent chunk
+        # writes never touch the same destination. Job descriptions are
+        # thread-local, so the UI labels each chunk correctly. Result
+        # order stays chunk-id-sorted (pool.map preserves input order).
+        # A failed chunk raises only after the pool has drained, so every
+        # other chunk still commits before ``_staging`` goes.
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            return list(pool.map(_one, todo))
+    finally:
+        fs.delete(staging_path, True)

@@ -2,7 +2,14 @@
 
 import random
 
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
+from pyspark.sql import functions as F
+
 from rdf_to_text_spark.operators.canonicalize import (
+    alias_clusters,
+    canonical_entity_table,
     connected_components,
     first_token_clusters,
 )
@@ -228,3 +235,64 @@ def test_cc_shortcut_edges_preserve_components(spark):
     base = dict(_local_union_find(pairs))
     aug = dict(_local_union_find([(r.src, r.dst) for r in cut]))
     assert base == aug
+
+
+def _cc_reference_table(surfaces, clusterer):
+    """The earlier spelling of canonical_entity_table: clusters → CC over
+    hashed (surface, rep) edges → left-join back with coalesce for
+    singletons → groupBy component."""
+    clusters = clusterer(surfaces)
+    nodes = (
+        clusters.select("surface")
+        .unionByName(clusters.select(F.col("rep").alias("surface")))
+        .distinct()
+        .withColumn("node", F.abs(F.xxhash64("surface")))
+    )
+    cc_edges = clusters.select(
+        F.abs(F.xxhash64("surface")).alias("src"),
+        F.abs(F.xxhash64("rep")).alias("dst"),
+    )
+    comp = connected_components(cc_edges, max_iter=8)
+    return (
+        nodes.join(comp, "node", "left")
+        .withColumn("component", F.coalesce("component", "node"))
+        .groupBy("component")
+        .agg(
+            F.min("surface").alias("canonical"),
+            F.sort_array(F.collect_set("surface")).alias("surfaces"),
+        )
+    )
+
+
+def _table_rows(df):
+    return sorted((r.component, r.canonical, tuple(r.surfaces)) for r in df.collect())
+
+
+# case, whitespace, paren-suffix and paren-leading variants over a few
+# shared head words, so both clusterers see real multi-member groups
+_word = st.sampled_from(["aarhus", "airport", "denmark", "rock", "stars", "a/s"])
+_surface = st.builds(
+    lambda words, sep, case, paren, lead: lead + sep.join(case(w) for w in words) + paren,
+    st.lists(_word, min_size=1, max_size=3),
+    st.sampled_from([" ", "  ", "\t"]),
+    st.sampled_from([str.lower, str.title, str.upper]),
+    st.sampled_from(["", " (Denmark)", "(city)", " (500)"]),
+    st.sampled_from(["", "(500) ", " ", "(x)"]),
+)
+
+
+@pytest.mark.parametrize("clusterer", [first_token_clusters, alias_clusters])
+@settings(max_examples=8, deadline=None)
+@given(surfaces=st.lists(_surface, min_size=1, max_size=14))
+def test_canonical_entity_table_equals_cc_reference(spark, clusterer, surfaces):
+    """The one-aggregate tail equals the clusters → CC → join → groupBy
+    spelling, and each clusterer honours the contract it relies on: a
+    partition whose every rep is a member that maps to itself."""
+    df = spark.createDataFrame([(x,) for x in surfaces], "surface string")
+    rows = clusterer(df).collect()
+    mapping = {r.surface: r.rep for r in rows}
+    assert len(rows) == len(mapping) and set(mapping) == set(surfaces)
+    assert all(mapping.get(rep) == rep for rep in mapping.values())
+    assert _table_rows(canonical_entity_table(df, clusterer=clusterer)) == _table_rows(
+        _cc_reference_table(df, clusterer)
+    )

@@ -1,12 +1,15 @@
 """Resumable MERGE sink: idempotence + exact resume (north_rule)."""
 
 import glob
+import os
 import shutil
 import tempfile
 
 import pytest
+from pyspark.sql import functions as F
 
 from rdf_to_text_spark import fixtures
+from rdf_to_text_spark.pipeline import extract_pipeline
 from rdf_to_text_spark.sinks.merge import BucketedParquetMerge, run_resumable
 
 
@@ -17,14 +20,16 @@ def base_dir():
     shutil.rmtree(d, ignore_errors=True)
 
 
+def _edge_set(sink):
+    return {(r.subj, r.pred, r.obj) for r in sink.edges().select("subj", "pred", "obj").collect()}
+
+
 def test_full_run_then_resume_is_idempotent(spark, base_dir):
     pages = fixtures.pages_from_documents(spark, "/root/testdata/sf0.001")
     res = run_resumable(spark, pages, base_dir, n_chunks=4)
     assert sorted(r["chunk_id"] for r in res) == [0, 1, 2, 3]
     sink = BucketedParquetMerge(spark, base_dir)
-    edges_before = {
-        (r.subj, r.pred, r.obj) for r in sink.edges().select("subj", "pred", "obj").collect()
-    }
+    edges_before = _edge_set(sink)
 
     # simulate a crash that lost the last two chunk commits
     for p in glob.glob(f"{base_dir}/lineage/chunk=2") + glob.glob(f"{base_dir}/lineage/chunk=3"):
@@ -32,10 +37,7 @@ def test_full_run_then_resume_is_idempotent(spark, base_dir):
     res2 = run_resumable(spark, pages, base_dir, n_chunks=4)
     assert sorted(r["chunk_id"] for r in res2) == [2, 3]
 
-    edges_after = {
-        (r.subj, r.pred, r.obj) for r in sink.edges().select("subj", "pred", "obj").collect()
-    }
-    assert edges_before == edges_after  # exact resume, no dupes
+    assert edges_before == _edge_set(sink)  # exact resume, no dupes
 
     # a fully-committed job is a no-op on re-run
     assert run_resumable(spark, pages, base_dir, n_chunks=4) == []
@@ -51,3 +53,44 @@ def test_lineage_metrics_rows(spark, base_dir):
     # entity table derives from edges with stable ids
     ents = sink.entities()
     assert ents.count() == ents.select("entity_id").distinct().count()
+
+
+def test_corrupt_lineage_raises(spark, base_dir):
+    """Only a MISSING lineage dir means "nothing committed"; an unreadable
+    one must fail the job, not silently re-run and overwrite every chunk."""
+    pages = fixtures.pages_from_range(spark, 200)
+    os.makedirs(f"{base_dir}/lineage")
+    with open(f"{base_dir}/lineage/part-00000.parquet", "w") as f:
+        f.write("not parquet")
+    with pytest.raises(Exception, match="(?i)footer"):
+        run_resumable(spark, pages, base_dir, n_chunks=2)
+    assert not os.path.exists(f"{base_dir}/edges")
+
+
+def test_failed_chunk_in_pool_resumes_exactly(spark, base_dir):
+    """Fault injection inside the concurrent chunk pool: one chunk's job
+    fails; every other chunk still commits, the staging dir is removed,
+    and a rerun executes only the failed chunk and ends equal to a clean
+    run."""
+    pages = fixtures.pages_from_range(spark, 200)
+
+    def failing_extract(df):
+        boom = F.when(F.pmod("doc_id", F.lit(4)) == 2, F.raise_error(F.lit("injected")))
+        return extract_pipeline(df.filter(boom.otherwise(F.lit(True))), use_html=True)
+
+    with pytest.raises(Exception, match="injected"):
+        run_resumable(spark, pages, base_dir, n_chunks=4, extract=failing_extract)
+    sink = BucketedParquetMerge(spark, base_dir)
+    assert sorted(r.chunk_id for r in sink.lineage().collect()) == [0, 1, 3]
+    assert not os.path.exists(f"{base_dir}/_staging")
+
+    res = run_resumable(spark, pages, base_dir, n_chunks=4)
+    assert [r["chunk_id"] for r in res] == [2]
+    assert not os.path.exists(f"{base_dir}/_staging")
+
+    clean_dir = tempfile.mkdtemp(prefix="kgsink_clean_")
+    try:
+        run_resumable(spark, pages, clean_dir, n_chunks=4)
+        assert _edge_set(sink) == _edge_set(BucketedParquetMerge(spark, clean_dir))
+    finally:
+        shutil.rmtree(clean_dir, ignore_errors=True)
