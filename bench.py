@@ -80,7 +80,7 @@ def main() -> None:
             "kg_levi_edges",
             "kg_triple_support",
             "dedup_groups",
-            "dedup_minhash_pairs",
+            "dedup_minhash_md5_pairs",
             "text_quality",
             "ann_cosine_topk",
             "tpch_q1",
@@ -319,8 +319,8 @@ def main() -> None:
         }
         if brute:
             extras["ann_ivf_recall"] = round(len(brute & ivf) / len(brute), 3)
-    except Exception:
-        pass
+    except Exception as exc:  # keep the one JSON line; say which key is missing
+        extras["ann_recall_error"] = f"{type(exc).__name__}: {exc}"[:500]
     # full pass done: drop the session-lifetime extraction/stream caches
     # too, so repeated bench invocations in one interpreter stay flat
     queries_catalog.release_caches(evict_session_caches=True)

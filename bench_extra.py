@@ -9,7 +9,7 @@ line per invocation; never used by the driver.
 
 Usage:
   SPARK_GRAFT_CPUS=32 python bench_extra.py --sf-dir /root/testdata/sf1.0 \
-      --queries dedup_minhash_pairs,multimodal_decode_jpeg --repeats 3 \
+      --queries dedup_minhash_md5_pairs,multimodal_decode_jpeg --repeats 3 \
       [--noop] [--explain plans/r08 --suffix _before]
 """
 

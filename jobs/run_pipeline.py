@@ -12,8 +12,7 @@ Local smoke:
 The job is chunked and resumable: each chunk commits triples + a
 lineage row atomically-enough (per-chunk partition overwrite); rerun
 after a crash re-executes only chunks without lineage. See
-rdf_to_text_spark/sinks/merge.py for the protocol and the Iceberg
-MERGE INTO contract used when a catalog is configured.
+rdf_to_text_spark/sinks/merge.py for the protocol.
 """
 
 from __future__ import annotations

@@ -1,23 +1,28 @@
 """Deduplication operators for training-data pipelines.
 
 Exact (hash-groupBy), MinHash+LSH, SimHash, and n-gram Jaccard — the
-standard near-dup ladder for web corpora. All hashing is engine-side
-(xxhash64 / md5) or vectorized numpy inside pandas UDFs; nothing
-row-at-a-time.
+standard near-dup ladder for web corpora. Every hash is md5 (MinHash
+and SimHash take its top 64 bits), so each operator has a DuckDB
+replay; the hashing runs in Arrow batches (mapInPandas / pandas UDFs)
+or engine-side, nothing row-at-a-time on the JVM.
 
 Scale notes: exact dedup is one shuffle on the digest. MinHash-LSH is
-shingle-explode → per-doc signature agg → band explode → bucket
-groupBy: three shuffles, each on keys that are uniform by construction
-(hashes), so no skew handling is needed beyond AQE.
+a narrow signature map → narrow band explode → bucket-size window and
+ids-only bucket self-join → pair dedup, each shuffle on keys that are
+uniform by construction (hashes), so no skew handling is needed beyond
+AQE.
 """
 
 from __future__ import annotations
 
+import hashlib
+import re
+
 import numpy as np
 import pandas as pd
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
 
 # ------------------------------------------------------------------ exact
 def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -42,192 +47,6 @@ def dedup_exact_keep_first(docs: DataFrame, text_col: str = "text", id_col: str 
 
 
 # ---------------------------------------------------------------- minhash
-def minhash_signatures(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = 64,
-    shingle_k: int = 3,
-    seed: int = 42,
-) -> DataFrame:
-    """(doc_id, sig: array<long>) MinHash signatures.
-
-    Universal-hash family a*x+b mod p over shingle hashes, evaluated as
-    one (num_perm × n_shingles) numpy broadcast per document — Arrow
-    batches in, Arrow batches out.
-
-    Shingle hashing is fully vectorized (no per-shingle Python loop):
-    every token in the Arrow batch is hashed ONCE with pandas'
-    deterministic 64-bit hash (`pd.util.hash_array`, fixed default key —
-    PYTHONHASHSEED-independent, identical on every executor), then each
-    k-gram hash is the wraparound-uint64 combination of its k token
-    hashes under distinct odd multipliers. MinHash is multiset-
-    insensitive (min over duplicates == min over the set), so shingles
-    are NOT uniqued before the broadcast.
-    """
-    rng = np.random.RandomState(seed)
-    p = (1 << 61) - 1
-    a = rng.randint(1, p, size=num_perm, dtype=np.int64).astype(np.uint64)
-    b = rng.randint(0, p, size=num_perm, dtype=np.int64).astype(np.uint64)
-    # odd multipliers: one per in-shingle position (injective-ish mixing)
-    mults = (
-        rng.randint(0, 1 << 62, size=shingle_k, dtype=np.int64).astype(np.uint64) * 2 + 1
-    )
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def sig_udf(texts: pd.Series) -> pd.Series:
-        k = shingle_k
-        tok_lists = [(t or "").lower().split() for t in texts]
-        lens = np.fromiter((len(t) for t in tok_lists), dtype=np.int64, count=len(tok_lists))
-        flat = [tok for toks in tok_lists for tok in toks]
-        th = (
-            pd.util.hash_array(np.asarray(flat, dtype=object)).astype(np.uint64)
-            if flat
-            else np.empty(0, dtype=np.uint64)
-        )
-        ends = np.cumsum(lens)
-        sigs = []
-        for i, n in enumerate(lens):
-            if n == 0:
-                sigs.append([0] * num_perm)
-                continue
-            h = th[ends[i] - n : ends[i]]
-            if n < k:
-                x = (h * mults[:n]).sum(keepdims=True)  # one whole-doc shingle
-            else:
-                x = np.zeros(n - k + 1, dtype=np.uint64)
-                for j in range(k):
-                    x += h[j : n - k + 1 + j] * mults[j]
-            # (num_perm, n_shingles) broadcast; min over shingles
-            vals = (a[:, None] * x[None, :] + b[:, None]) % np.uint64(p)
-            sigs.append(vals.min(axis=1).astype(np.int64).tolist())
-        return pd.Series(sigs)
-
-    return docs.select(F.col(id_col), sig_udf(F.col(text_col)).alias("sig"))
-
-
-def band_buckets(
-    sigs: DataFrame, bands: int, rows_per_band: int, id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, band, bucket) rows: each signature sliced into `bands`
-    bands of `rows_per_band` rows, each band hashed to one 64-bit
-    bucket (xxhash64 salted with the band index). Narrow — no shuffle;
-    shared verbatim by the batch LSH join (:func:`minhash_lsh_candidates`)
-    and the streaming candidate generator
-    (streaming/dedup_stream.py) so both see identical buckets."""
-    return sigs.select(
-        id_col,
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda bidx: F.xxhash64(
-                    F.concat_ws(
-                        ",",
-                        F.slice(
-                            F.col("sig"), bidx * rows_per_band + 1, rows_per_band
-                        ).cast("array<string>"),
-                    ),
-                    bidx,
-                ),
-            )
-        ).alias("band", "bucket"),
-    )
-
-
-def minhash_lsh_candidates(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = 64,
-    bands: int = 16,
-    shingle_k: int = 3,
-    max_bucket: int = 128,
-    cleanup: list | None = None,
-) -> DataFrame:
-    """(doc_a, doc_b, est_jaccard) candidate near-duplicate pairs.
-
-    Band signatures → per-(band, bucket) self-join on ids ONLY → pair
-    dedup → signatures re-attached for the exact agreement estimate.
-
-    Scale design (the order of operations is the point):
-      * the self-join carries (id, band, bucket) rows — never the
-        64-long signature arrays — so the bucket shuffle moves ~24
-        bytes/row instead of ~550;
-      * buckets larger than `max_bucket` are dropped BEFORE the join:
-        a degenerate bucket (empty/boilerplate docs all sharing one
-        band hash) would otherwise go quadratic. This is a recall
-        trade, stated plainly: a NEAR-dup of an over-cap exact-dup
-        cluster loses every band it shares with the cluster (its other
-        bands hold it alone), so such pairs are not emitted — the
-        standard web-dedup posture, where over-cap clusters are exact
-        dups that the exact rung collapses to one keeper first, after
-        which the near-dup collides with the keeper normally;
-      * signatures are persisted: they feed the banding pass AND the
-        two re-attach joins, and recomputing the UDF 3× would dominate.
-        The persist cannot be dropped before we return (the caller's
-        action runs later), so by default it lives until session end;
-        repeated catalog/bench invocations should pass `cleanup` — the
-        persisted handle is appended to it for the caller to unpersist
-        after materializing the result. Same contract as
-        functions/ranking.py: once the handle is unpersisted, the
-        returned DataFrame must not be re-executed (the signature UDF
-        is deterministic here, so a re-run is merely wasteful, not
-        wrong — unlike rank outputs — but the one-materialization
-        discipline is the same).
-    """
-    rows_per_band = num_perm // bands
-    sigs = minhash_signatures(docs, text_col, id_col, num_perm, shingle_k).persist()
-    if cleanup is not None:
-        cleanup.append(sigs)
-    banded = band_buckets(sigs, bands, rows_per_band, id_col)
-    bucket_w = Window.partitionBy("band", "bucket")
-    kept = (
-        banded.withColumn("_bsz", F.count("*").over(bucket_w))
-        .filter(F.col("_bsz") <= max_bucket)
-        .drop("_bsz")
-    )
-    pairs = (
-        kept.alias("x")
-        .join(
-            kept.alias("y"),
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bucket") == F.col("y.bucket"))
-            & (F.col(f"x.{id_col}") < F.col(f"y.{id_col}")),
-        )
-        .select(
-            F.col(f"x.{id_col}").alias("doc_a"),
-            F.col(f"y.{id_col}").alias("doc_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    scored = pairs.join(
-        sigs.select(F.col(id_col).alias("doc_a"), F.col("sig").alias("sig_a")), "doc_a"
-    ).join(
-        sigs.select(F.col(id_col).alias("doc_b"), F.col("sig").alias("sig_b")), "doc_b"
-    )
-    agree = F.size(
-        F.filter(
-            F.zip_with("sig_a", "sig_b", lambda u, v: (u == v).cast("int")),
-            lambda z: z == 1,
-        )
-    )
-    return scored.select(
-        "doc_a", "doc_b", (agree / F.lit(num_perm)).alias("est_jaccard")
-    )
-
-
-def _hex16_to_uint64(hex_list: list) -> "np.ndarray":
-    """Vectorized 16-hex-char → uint64 (ASCII lookup table)."""
-    asc = np.frombuffer("".join(hex_list).encode("ascii"), dtype=np.uint8)
-    return (_HEX_LUT[asc].reshape(-1, 16) * _HEX_WEIGHTS).sum(axis=1, dtype=np.uint64)
-
-
-_HEX_LUT = np.zeros(256, dtype=np.uint64)
-for _i, _c in enumerate("0123456789abcdef"):
-    _HEX_LUT[ord(_c)] = _i
-_HEX_WEIGHTS = np.uint64(16) ** np.arange(15, -1, -1, dtype=np.uint64)
-
-
 # Java String.trim strips every char <= U+0020 (including controls);
 # Python str.strip strips Unicode whitespace — not the same set, so the
 # Arrow kernel strips Java's set explicitly.
@@ -241,7 +60,6 @@ def minhash_signatures_md5(
     num_perm: int = 64,
     shingle_k: int = 3,
     seed: int = 42,
-    kernel: str = "arrow",
 ) -> DataFrame:
     """(doc_id, sig: array<long>) MinHash signatures over a PORTABLE
     hash family, replayable in SQL (the oracle for
@@ -252,106 +70,63 @@ def minhash_signatures_md5(
 
     The mod-2⁶⁴ wrap is EXPLICIT in the definition because numpy uint64
     arithmetic wraps — the DuckDB replay emulates the same wrap in
-    HUGEINT. (a_k, b_k) come from the same fixed-seed RNG as the fast
-    variant.
+    HUGEINT. (a_k, b_k) come from a fixed-seed RNG.
 
-    Kernels (identical values; equivalence-tested like the winnowing
-    pair): the DEFAULT ``kernel="arrow"`` tokenizes, shingles and md5s
-    inside one mapInPandas (CPython hashlib md5 measures ~1.4M
-    shingles/s per core, and the nested transform/md5/substring HOF
-    chain of the expression form pays the shared-JVM boxed-array wall —
-    measured ~5 s for a 64k-doc corpus at 32 cores vs ~1.5 s for the
-    Arrow form, r8). ``kernel="expr"`` keeps the engine-side shingle
-    build (tokenize split/lower/trim + HOF md5) with the UDF only
-    parsing hex — the form whose every step has a direct SQL spelling.
-    Tokenization in the Arrow kernel replicates the engine exactly for
+    Tokenize, shingle and md5 run inside one mapInPandas: CPython
+    hashlib md5 measures ~1.4M shingles/s per core, while the
+    engine-side spelling (a nested transform/md5/substring HOF chain)
+    pays the shared-JVM boxed-array wall — ~5 s for a 64k-doc corpus at
+    32 cores vs ~1.5 s for this kernel (r8). That engine-side spelling
+    is kept in tests/test_dedup_similarity.py as the reference this
+    kernel must equal. Tokenization replicates the engine exactly for
     the Java-regex ASCII \\s class and Java trim semantics (chars <=
     U+0020); non-ASCII case folding follows Python's str.lower, which
-    agrees with the JVM on ASCII (the corpus contract)."""
+    agrees with the JVM on ASCII (the corpus contract). NULL text is
+    empty text: the single md5("") whole-doc shingle."""
     rng = np.random.RandomState(seed)
     p = (1 << 61) - 1
     a = rng.randint(1, p, size=num_perm, dtype=np.int64).astype(np.uint64)
     b = rng.randint(0, p, size=num_perm, dtype=np.int64).astype(np.uint64)
     k = shingle_k
+    ws = re.compile(r"[ \t\n\x0b\f\r]+")
 
-    if kernel == "arrow":
-        import hashlib
-        import re
+    def run(batches):
+        for pdf in batches:
+            out_id, out_sig = [], []
+            for did, text in zip(pdf[id_col], pdf[text_col]):
+                toks = ws.split((text or "").strip(_JAVA_TRIM_CHARS).lower())
+                shingles = (
+                    [" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)]
+                    if len(toks) >= k
+                    else [" ".join(toks)]
+                )
+                x = np.array(
+                    [
+                        int(hashlib.md5(s.encode("utf-8")).hexdigest()[:16], 16)
+                        for s in shingles
+                    ],
+                    dtype=np.uint64,
+                )
+                vals = (a[:, None] * x[None, :] + b[:, None]) % np.uint64(p)
+                out_id.append(did)
+                out_sig.append(vals.min(axis=1).astype(np.int64).tolist())
+            yield pd.DataFrame({id_col: out_id, "sig": out_sig})
 
-        ws = re.compile(r"[ \t\n\x0b\f\r]+")
-
-        def run(batches):
-            for pdf in batches:
-                out_id, out_sig = [], []
-                for did, text in zip(pdf[id_col], pdf[text_col]):
-                    # NULL text ≡ empty text in the expr kernel:
-                    # concat_ws skips the NULL token array, so both
-                    # yield the single md5("") whole-doc shingle
-                    toks = ws.split((text or "").strip(_JAVA_TRIM_CHARS).lower())
-                    if len(toks) >= k:
-                        hs = [
-                            int(
-                                hashlib.md5(
-                                    " ".join(toks[i : i + k]).encode("utf-8")
-                                ).hexdigest()[:16],
-                                16,
-                            )
-                            for i in range(len(toks) - k + 1)
-                        ]
-                    else:
-                        hs = [
-                            int(
-                                hashlib.md5(
-                                    " ".join(toks).encode("utf-8")
-                                ).hexdigest()[:16],
-                                16,
-                            )
-                        ]
-                    x = np.array(hs, dtype=np.uint64)
-                    vals = (a[:, None] * x[None, :] + b[:, None]) % np.uint64(p)
-                    out_id.append(did)
-                    out_sig.append(vals.min(axis=1).astype(np.int64).tolist())
-                yield pd.DataFrame({id_col: out_id, "sig": out_sig})
-
-        return docs.select(F.col(id_col), F.col(text_col)).mapInPandas(
-            run, schema=f"{id_col} long, sig array<long>"
-        )
-    if kernel != "expr":
-        raise ValueError(f"kernel must be 'expr' or 'arrow' (got {kernel!r})")
-
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    shingles = F.when(
-        F.size(toks) >= k,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - k),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", toks)))
-    hexes = F.transform(shingles, lambda s: F.substring(F.md5(s), 1, 16))
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def sig_udf(hex_lists: pd.Series) -> pd.Series:
-        sigs = []
-        for hl in hex_lists:
-            hl = list(hl) if hl is not None else []  # NULL text -> NULL array
-            if not hl:
-                sigs.append([0] * num_perm)
-                continue
-            x = _hex16_to_uint64(hl)
-            vals = (a[:, None] * x[None, :] + b[:, None]) % np.uint64(p)
-            sigs.append(vals.min(axis=1).astype(np.int64).tolist())
-        return pd.Series(sigs)
-
-    return docs.select(F.col(id_col), sig_udf(hexes).alias("sig"))
+    return docs.select(F.col(id_col), F.col(text_col)).mapInPandas(
+        run, schema=f"{id_col} long, sig array<long>"
+    )
 
 
 def band_buckets_md5(
     sigs: DataFrame, bands: int, rows_per_band: int, id_col: str = "doc_id"
 ) -> DataFrame:
-    """Portable twin of :func:`band_buckets`: md5 over the band's
-    comma-joined signature slice prefixed with the band index —
-    SQL-replayable, shared by the batch md5 join and the streaming
-    candidate generator's portable mode."""
+    """(id, band, bucket) rows: each signature sliced into `bands`
+    bands of `rows_per_band` rows, each band hashed to one bucket — md5
+    over the band's comma-joined slice prefixed with the band index, so
+    SQL-replayable. Narrow, no shuffle; shared verbatim by the batch LSH
+    join (:func:`minhash_lsh_candidates_md5`) and the streaming
+    candidate generator (streaming/dedup_stream.py), so both see
+    identical buckets."""
     return sigs.select(
         id_col,
         F.posexplode(
@@ -385,12 +160,39 @@ def minhash_lsh_candidates_md5(
     cleanup: list | None = None,
     pairs_only: bool = False,
 ) -> DataFrame:
-    """Portable-hash twin of :func:`minhash_lsh_candidates` — same
-    bucketed shape (ids-only self-join, bucket cap, signatures
-    re-attached after pair dedup), but every hash is SQL-replayable:
-    band buckets are md5 over the band's comma-joined signature slice
-    prefixed with the band index. Persist/`cleanup` contract as in
-    :func:`minhash_lsh_candidates`.
+    """(doc_a, doc_b, est_jaccard) candidate near-duplicate pairs.
+
+    Band signatures → per-(band, bucket) self-join on ids ONLY → pair
+    dedup → signatures re-attached for the exact agreement estimate.
+    Every hash is SQL-replayable (:func:`minhash_signatures_md5`,
+    :func:`band_buckets_md5`), so the DuckDB oracle of
+    `dedup_minhash_md5_pairs` replays the whole candidate set.
+
+    Scale design (the order of operations is the point):
+      * the self-join carries (id, band, bucket) rows — never the
+        64-long signature arrays — so the bucket shuffle moves ~24
+        bytes/row instead of ~550;
+      * buckets larger than `max_bucket` are dropped BEFORE the join:
+        a degenerate bucket (empty/boilerplate docs all sharing one
+        band hash) would otherwise go quadratic. This is a recall
+        trade, stated plainly: a NEAR-dup of an over-cap exact-dup
+        cluster loses every band it shares with the cluster (its other
+        bands hold it alone), so such pairs are not emitted — the
+        standard web-dedup posture, where over-cap clusters are exact
+        dups that the exact rung collapses to one keeper first, after
+        which the near-dup collides with the keeper normally;
+      * signatures are persisted: they feed the banding pass AND the
+        two re-attach joins, and recomputing the kernel 3× would
+        dominate. The persist cannot be dropped before we return (the
+        caller's action runs later), so by default it lives until
+        session end; repeated catalog/bench invocations should pass
+        `cleanup` — the persisted handle is appended to it for the
+        caller to unpersist after materializing the result. Same
+        contract as functions/ranking.py: once the handle is
+        unpersisted, the returned DataFrame must not be re-executed
+        (the signature kernel is deterministic here, so a re-run is
+        merely wasteful, not wrong — unlike rank outputs — but the
+        one-materialization discipline is the same).
 
     ``pairs_only=True`` returns the deduped (doc_a, doc_b) candidate
     set WITHOUT the est_jaccard scoring tail. The scoring re-attaches
@@ -445,47 +247,16 @@ def minhash_lsh_candidates_md5(
 
 
 # ---------------------------------------------------------------- simhash
-def simhash(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, simhash: long) 64-bit SimHash over unigram xxhash64.
+def _hex16_to_uint64(hex_list: list) -> "np.ndarray":
+    """Vectorized 16-hex-char → uint64 (ASCII lookup table)."""
+    asc = np.frombuffer("".join(hex_list).encode("ascii"), dtype=np.uint8)
+    return (_HEX_LUT[asc].reshape(-1, 16) * _HEX_WEIGHTS).sum(axis=1, dtype=np.uint64)
 
-    Token hashing stays engine-side (xxhash64 inside a higher-order
-    `transform` — the SAME hash family as :func:`simhash_dataframe`,
-    which is kept as the cross-check twin); the 64-bit majority vote is
-    one vectorized numpy pandas_udf over the per-doc hash arrays.
 
-    Scale design: this is a narrow map with ZERO shuffle. The pure
-    DataFrame formulation explodes tokens × 64 bits — a 64× row blowup
-    through two groupBy shuffles, which at web scale is the largest
-    shuffle in the repo for what is logically a per-row computation.
-
-    Divergence from the DataFrame twin: docs with no tokens emit
-    simhash=0 here, while the explode-based twin drops them (nothing to
-    explode).
-    """
-    toks = F.filter(
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+"), lambda t: t != F.lit("")
-    )
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-
-    @F.pandas_udf(LongType())
-    def vote(harr: pd.Series) -> pd.Series:
-        shifts = np.arange(64, dtype=np.uint64)
-        weights = np.uint64(1) << shifts
-        out = np.zeros(len(harr), dtype=np.int64)
-        for i, hl in enumerate(harr):
-            if hl is None:  # NULL text propagates a NULL hash array
-                continue
-            h = np.asarray(hl, dtype=np.int64).view(np.uint64)
-            if h.size == 0:
-                continue
-            ones = ((h[:, None] >> shifts) & np.uint64(1)).sum(axis=0)
-            # sign sum s = 2*ones - n; bit set iff s > 0
-            mask = 2 * ones > h.size
-            val = (weights * mask).sum(dtype=np.uint64)
-            out[i] = np.array([val], dtype=np.uint64).view(np.int64)[0]
-        return pd.Series(out)
-
-    return docs.select(F.col(id_col), vote(hashes).alias("simhash"))
+_HEX_LUT = np.zeros(256, dtype=np.uint64)
+for _i, _c in enumerate("0123456789abcdef"):
+    _HEX_LUT[ord(_c)] = _i
+_HEX_WEIGHTS = np.uint64(16) ** np.arange(15, -1, -1, dtype=np.uint64)
 
 
 def simhash_md5(
@@ -495,12 +266,14 @@ def simhash_md5(
     token hash (the top 64 bits of md5), so the whole algorithm — token
     hashing, per-bit majority vote, signature assembly — is replayable
     in ANSI-ish SQL and hash-checked by the driver oracle
-    (`dedup_simhash_md5`). The xxhash64 variant (:func:`simhash`) stays
-    the fast path; this one pays an md5 per token.
+    (`dedup_simhash_md5`).
 
-    Same zero-shuffle shape: md5 computed engine-side inside a
-    higher-order transform, the vote in one vectorized numpy pandas_udf
-    (hex parsing via an ASCII lookup table — no per-token Python).
+    Scale design: a narrow map with ZERO shuffle — md5 computed
+    engine-side inside a higher-order transform, the 64-bit majority
+    vote in one vectorized numpy pandas_udf (hex parsing via an ASCII
+    lookup table — no per-token Python). The explode-tokens × 64-bits
+    DataFrame formulation would be a 64× row blowup through two
+    groupBy shuffles for what is logically a per-row computation.
     The signature is emitted as hex so bit 63 needs no signed-long
     wraparound games on either engine."""
     toks = F.filter(
@@ -527,39 +300,14 @@ def simhash_md5(
     return docs.select(F.col(id_col), vote(hexes).alias("simhash_hex"))
 
 
-def simhash_dataframe(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """The pure-DataFrame SimHash formulation (explode tokens → per-
-    (doc, bit) weighted sum of ±1 → reassemble bits — no Python at all).
-
-    Kept as the cross-check twin for :func:`simhash`: identical hash
-    family, so both must produce identical signatures (property-tested).
-    NOT the scale path — the 64× bit explode is two full shuffles.
-    """
-    toks = docs.select(
-        id_col, F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("tok")
-    ).filter(F.col("tok") != "")
-    hashed = toks.select(id_col, F.xxhash64("tok").alias("h"))
-    bits = hashed.select(
-        id_col,
-        F.expr(
-            "posexplode(transform(sequence(0, 63),"
-            " i -> cast(case when shiftrightunsigned(h, i) % 2 != 0 then 1 else -1 end as long)))"
-        ).alias("bit", "sign"),
-    )
-    agg = bits.groupBy(id_col, "bit").agg(F.sum("sign").alias("s"))
-    return agg.groupBy(id_col).agg(
-        F.sum(F.expr("case when s > 0 then shiftleft(1L, bit) else 0L end")).alias("simhash")
-    )
-
-
 class _LocalCheckpointHandle:
     """Release handle for a localCheckpoint'ed DataFrame. A plain
     DataFrame.unpersist() is a no-op for checkpoint blocks (they belong
     to the internal JVM RDD the LogicalRDD plan wraps, not to the cache
-    manager), so this reaches that RDD via py4j; failures degrade to
-    the old keep-until-session-end behavior."""
+    manager), so this reaches that RDD via py4j (release pinned by
+    tests/test_dedup_similarity.py). A py4j failure — e.g. a JVM whose
+    plan no longer exposes the RDD — degrades to keep-until-session-end;
+    any other error propagates."""
 
     def __init__(self, df: DataFrame):
         self._df = df
@@ -567,7 +315,7 @@ class _LocalCheckpointHandle:
     def unpersist(self) -> None:
         try:
             self._df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        except Exception:
+        except Py4JError:
             pass
 
 

@@ -128,53 +128,6 @@ def link_surface(surface: str, aliases: dict[str, tuple[str, str]]) -> str | Non
     return hit[0] if hit else None
 
 
-def _extract_from_text(
-    doc_id: int, url: str, text: str, bank: PatternBank, aliases: dict
-) -> list[tuple]:
-    """Extract linked triples from one normalized page text.
-
-    TEST-ONLY executable spec: the per-row loop here defines the
-    semantics that the vectorized `_extract_batch` must match (pinned
-    in tests/test_extract.py). Never wire this into a pipeline — the
-    hot path is the Arrow-batched vectorized kernel."""
-    rows: list[tuple] = []
-    pos = 0
-    for sent_idx, sentence in enumerate(text.split(" . ")):
-        if not sentence.endswith(" ."):
-            sentence = sentence + " ."
-        best: tuple | None = None
-        best_rank: tuple | None = None
-        for tid, rx, pred, n_literal in bank.compiled:
-            m = rx.match(sentence)
-            if m is None:
-                continue
-            gd = m.groupdict()
-            subj = link_surface(gd.get("e1", ""), aliases)
-            obj = link_surface(gd.get("e2", ""), aliases)
-            if subj is None or obj is None:
-                continue
-            rank = (-n_literal, tid)
-            if best_rank is None or rank < best_rank:
-                best_rank = rank
-                best = (
-                    doc_id,
-                    url,
-                    sent_idx,
-                    subj,
-                    pred,
-                    obj,
-                    gd.get("e1", ""),
-                    gd.get("e2", ""),
-                    tid,
-                    pos,
-                    pos + len(sentence),
-                )
-        if best is not None:
-            rows.append(best)
-        pos += len(sentence) + 1  # ' ' separator; split removed ' . ' -> +3 below
-    return rows
-
-
 def _link_series(s: pd.Series, alias_map: dict[str, str]) -> pd.Series:
     """Vectorized alias ladder: exact → lowercase → paren-stripped prefix."""
     exact = s.map(alias_map)

@@ -1,8 +1,9 @@
 """Text analysis for training-data pipelines: language ID, quality
-scoring, token counting, fingerprinting.
+gates, token counting, fingerprinting.
 
-All pure engine expressions (whole-stage codegen, no Python) so the
-DuckDB oracles can reproduce them exactly. Ratios are rounded to fixed
+Engine expressions wherever the JVM runs them well, so the DuckDB
+oracles can reproduce them exactly; the BPE encoder and the winnowing
+kernel run in Arrow batches (mapInPandas). Ratios are rounded to fixed
 decimals at the operator boundary — the cross-engine hash contract.
 """
 
@@ -43,47 +44,6 @@ def bpe_token_count(
         F.col(id_col).cast("long"),
         F.size(_ws_tokens(text_col)).cast("int").alias("n_ws_tokens"),
         n_bpe.cast("int").alias("n_bpe_tokens"),
-    )
-
-
-def token_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, n_tokens, n_chars, avg_token_len) — whitespace tokens."""
-    toks = _ws_tokens(text_col)
-    return docs.select(
-        F.col(id_col),
-        F.size(toks).alias("n_tokens"),
-        F.length(F.col(text_col)).alias("n_chars"),
-        F.round(F.length(F.regexp_replace(F.col(text_col), r"\s+", "")) / F.size(toks), 4).alias(
-            "avg_token_len"
-        ),
-    )
-
-
-def quality_score(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, n_tokens, stopword_ratio, alpha_ratio, quality) —
-    length/stopword/alpha heuristics in the Gopher/C4 style.
-
-    quality = 1 when: 10 ≤ n_tokens ≤ 10000, stopword_ratio ≥ 0.01,
-    alpha_ratio ≥ 0.5 (share of [a-z] chars among non-space chars).
-    """
-    toks = _ws_tokens(text_col)
-    lower = F.lower(F.col(text_col))
-    nonspace = F.length(F.regexp_replace(lower, r"\s+", ""))
-    alpha = F.length(F.regexp_replace(lower, r"[^a-z]", ""))
-    sw_arr = F.array([F.lit(w) for w in EN_STOPWORDS])
-    n_sw = F.size(F.filter(F.split(F.trim(lower), r"\s+"), lambda t: F.array_contains(sw_arr, t)))
-    n_tok = F.size(toks)
-    stopword_ratio = F.round(n_sw / n_tok, 4)
-    alpha_ratio = F.round(alpha / F.greatest(nonspace, F.lit(1)), 4)
-    quality = (
-        (n_tok >= 10) & (n_tok <= 10000) & (stopword_ratio >= 0.01) & (alpha_ratio >= 0.5)
-    ).cast("int")
-    return docs.select(
-        F.col(id_col),
-        n_tok.alias("n_tokens"),
-        stopword_ratio.alias("stopword_ratio"),
-        alpha_ratio.alias("alpha_ratio"),
-        quality.alias("quality"),
     )
 
 
@@ -544,7 +504,6 @@ def winnow_fingerprints(
     id_col: str = "doc_id",
     k: int = 5,
     w: int = 8,
-    kernel: str = "arrow",
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson & Aiken,
     "Winnowing: Local Algorithms for Document Fingerprinting", SIGMOD
@@ -563,17 +522,7 @@ def winnow_fingerprints(
     they form a single (short) window and contribute their rightmost
     minimal shingle.
 
-    Kernels (same rows either way; equivalence-tested): the DEFAULT is
-    ``kernel="arrow"`` — the numpy sliding-window mapInPandas — because
-    the expression kernel's nested higher-order functions allocate
-    boxed arrays per row on the ONE shared JVM heap and measured nearly
-    FLAT 8→32-core scaling on this box, while the Arrow kernel scales
-    0.61-0.77 and is 2.1-2.4× faster absolute (BENCH.md r7 winnow
-    annotation; default flipped r8 per the r7 verdict). ``kernel=
-    "expr"`` remains the fully-engine-side form the independent DuckDB
-    oracle replays: one narrow projection — tokenize, shingle-hash
-    (transform over a sequence), per-window rightmost-argmin (zip_with
-    over window starts), distinct, explode; zero shuffle, zero Python.
+    The kernel is the numpy sliding window of :func:`_winnow_arrow`.
     Work is O(shingles * w) per document with w a small constant.
     Density: expected selected fraction is 2/(w+1) of shingles
     (SIGMOD 2003 §4), so the output is ~4x smaller than the shingle set
@@ -581,46 +530,7 @@ def winnow_fingerprints(
     """
     if k < 1 or w < 1:
         raise ValueError(f"k and w must be >= 1 (got k={k}, w={w})")
-    if kernel == "arrow":
-        return _winnow_arrow(docs, text_col, id_col, k, w)
-    if kernel != "expr":
-        raise ValueError(f"kernel must be 'expr' or 'arrow' (got {kernel!r})")
-    toks = F.filter(_ws_tokens(text_col), lambda t: t != F.lit(""))
-    d = docs.select(F.col(id_col).alias("doc_id"), toks.alias("toks")).filter(
-        F.size("toks") >= k
-    )
-    # hv[i] = 32-bit slot of md5(space-joined shingle at 0-based i)
-    hv = F.transform(
-        F.sequence(F.lit(0), F.size("toks") - k),
-        lambda i: F.conv(
-            F.substring(F.md5(F.concat_ws(" ", F.slice("toks", i + 1, k))), 1, 8),
-            16,
-            10,
-        ).cast("long"),
-    )
-    d = d.select("doc_id", hv.alias("hv"))
-    m = F.size("hv")
-    eff = F.least(F.lit(w), m)  # short docs: one window of all shingles
-    starts = F.sequence(F.lit(0), F.greatest(m - w, F.lit(0)))
-    wmins = F.transform(starts, lambda j: F.array_min(F.slice("hv", j + 1, eff)))
-    # rightmost position of the window minimum, per window start
-    sel = F.array_distinct(
-        F.zip_with(
-            starts,
-            wmins,
-            lambda j, mn: F.array_max(
-                F.filter(
-                    F.sequence(j, j + eff - 1),
-                    lambda p: F.get("hv", p) == mn,
-                )
-            ),
-        )
-    )
-    return d.select("doc_id", "hv", F.explode(sel).alias("pos")).select(
-        "doc_id",
-        F.col("pos").cast("long").alias("pos"),
-        F.get("hv", "pos").alias("fp"),
-    )
+    return _winnow_arrow(docs, text_col, id_col, k, w)
 
 
 def winnow_match_pairs(
@@ -641,7 +551,7 @@ def winnow_match_pairs(
     local/plagiarism-span complement to MinHash-LSH's whole-doc
     resemblance candidates (`operators/dedup.py`).
 
-    Scale shape: the `minhash_lsh_candidates` ladder discipline — the
+    Scale shape: the `minhash_lsh_candidates_md5` ladder discipline — the
     per-doc fingerprint sets are deduped to (doc, fp), fp groups larger
     than `max_docs_per_fp` are dropped BEFORE the self-join (boilerplate
     fingerprints — a shingle shared by thousands of pages — would
@@ -677,22 +587,19 @@ def winnow_match_pairs(
 def _winnow_arrow(
     docs: DataFrame, text_col: str, id_col: str, k: int, w: int
 ) -> DataFrame:
-    """Arrow kernel for :func:`winnow_fingerprints` (the DEFAULT since
-    r8) — same output as the expression kernel, numpy sliding-window
-    in mapInPandas. Why: the expression kernel's nested higher-order
-    functions allocate boxed arrays per row on the ONE shared JVM heap,
-    and measured 8→32 scaling collapses to ~0.35 while a
-    raw-multiprocessing md5 control on the same box reaches 0.68
-    (BENCH.md round-7 winnow annotation); process-per-core Python
+    """Arrow kernel for :func:`winnow_fingerprints`: numpy sliding
+    window in mapInPandas. Why not engine-side: the expression form's
+    nested higher-order functions allocate boxed arrays per row on the
+    ONE shared JVM heap, and measured 8→32 scaling collapses to ~0.35
+    while a raw-multiprocessing md5 control on the same box reaches
+    0.68 (BENCH.md round-7 winnow annotation); process-per-core Python
     workers sidestep the shared-heap wall (the rich-extract kernel
-    precedent). ``kernel="expr"`` remains available as the fully
-    engine-side form the DuckDB oracle replays — the two kernels are
-    equivalence-tested on corpus and crafted inputs
-    (tests/test_text_analysis.py).
+    precedent). That expression form — the one the DuckDB oracle
+    replays — is kept in tests/test_text_analysis.py as the reference
+    this kernel must equal on corpus and crafted inputs.
 
-    Output columns are ``doc_id, pos, fp`` regardless of ``id_col`` —
-    matching the expression kernel's aliasing (ADVICE r7) — and rows
-    with a NULL id are skipped like rows with NULL text.
+    Output columns are ``doc_id, pos, fp`` regardless of ``id_col``,
+    and rows with a NULL id are skipped like rows with NULL text.
 
     Tokenization matches the engine exactly: split on the Java-regex
     ASCII \\s class [ \\t\\n\\x0b\\f\\r] with empties dropped (NOT

@@ -4,16 +4,11 @@ north_rule: canonical (subj, pred, obj) triples are MERGEd into entity
 and edge tables partitioned by subject hash bucket; per-partition
 lineage + metrics rows make the job exactly resumable.
 
-The Iceberg runtime jar is not available in this sandbox, so the sink
-is abstracted behind one module with two equivalent implementations:
-
-  * :class:`IcebergMerge` — emits the real ``MERGE INTO`` statement
-    (used verbatim when a catalog is configured);
-  * :class:`BucketedParquetMerge` — the documented fallback: Hive-style
-    ``bucket`` partition columns + dynamic partition-overwrite, which
-    gives the same idempotence guarantee (re-running a chunk rewrites
-    exactly its own buckets, never duplicating rows) because the
-    chunk → bucket mapping is deterministic.
+The sink is :class:`BucketedParquetMerge`: Hive-style ``bucket``
+partition columns + dynamic partition-overwrite, which gives the
+idempotence of a ``MERGE INTO`` on (subj, pred, obj) (re-running a
+chunk rewrites exactly its own buckets, never duplicating rows) because
+the chunk → bucket mapping is deterministic.
 
 Resumability protocol (reference analog: best-checkpoint save/restore,
 `main_PG.py:210-218`; skip-counter lineage, `build_dataset.py:269-272`):
@@ -41,18 +36,6 @@ def _hadoop_path(spark: SparkSession, path: str):
     """(FileSystem, Path) for `path`, for any scheme Spark can read."""
     jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
-
-
-def iceberg_merge_sql(target: str = "kg.edges", n_buckets: int = 256) -> str:
-    """The MERGE used on a real Iceberg catalog (kept as the contract)."""
-    return f"""
-MERGE INTO {target} t
-USING batch_triples s
-ON t.subj = s.subj AND t.pred = s.pred AND t.obj = s.obj
-WHEN MATCHED THEN UPDATE SET t.last_seen_ts = s.warc_ts
-WHEN NOT MATCHED THEN INSERT *
--- target table: PARTITIONED BY (bucket({n_buckets}, subj))
-"""
 
 
 class BucketedParquetMerge:

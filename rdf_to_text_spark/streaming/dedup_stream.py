@@ -8,10 +8,11 @@ recomputing history. This module lifts the ladder's candidate rung to
 Structured Streaming:
 
   * signature + banding are the batch operators VERBATIM —
-    ``minhash_signatures`` is a narrow Arrow-batched map and
-    ``band_buckets`` a narrow projection, so both run unchanged on a
+    ``minhash_signatures_md5`` is a narrow Arrow-batched map and
+    ``band_buckets_md5`` a narrow projection, so both run unchanged on a
     streaming DataFrame (the same lift as the flagship's
-    streaming/extract_stream.py);
+    streaming/extract_stream.py) and the streamed candidate set uses
+    the batch rung's SQL-replayable md5 hash family;
   * the bucket self-join becomes ONE stateful operator:
     ``applyInPandasWithState`` keyed by (band, bucket), whose state is
     the ids already seen in that bucket. Each arriving id emits a
@@ -45,7 +46,7 @@ stream≡batch invariant test compares DISTINCT sets either way).
 
 Scale shape: state per (band, bucket) key is ≤ max_bucket longs — the
 engine checkpoints O(#non-singleton buckets · max_bucket) ids total,
-partitioned by the bucket key (uniform by construction: xxhash64
+partitioned by the bucket key (uniform by construction: md5
 buckets). No shuffle other than the stateful exchange on the bucket
 key, which is exactly the batch join's shuffle key.
 """
@@ -109,7 +110,6 @@ def streaming_minhash_candidates(
     bands: int = 16,
     shingle_k: int = 3,
     max_bucket: int = 128,
-    portable_md5: bool = False,
     engine: str = "state",
 ) -> DataFrame:
     """Streaming documents → (doc_a, doc_b) candidate pairs (append),
@@ -120,23 +120,15 @@ def streaming_minhash_candidates(
     output cannot feed the built-in dropDuplicates state operator).
 
     Same parameters, same signatures, same buckets as the batch
-    ``minhash_lsh_candidates`` — only the bucket self-join is replaced
-    by the incremental stateful emit described in the module docstring.
-    ``portable_md5`` swaps in the SQL-replayable hash family
-    (``minhash_signatures_md5``/``band_buckets_md5``) so a DuckDB
-    oracle can replay the streamed candidate set exactly.
+    ``minhash_lsh_candidates_md5`` (``minhash_signatures_md5`` and
+    ``band_buckets_md5``, so a DuckDB oracle can replay the streamed
+    candidate set exactly) — only the bucket self-join is replaced by
+    the incremental stateful emit described in the module docstring.
     """
-    from ..operators.dedup import (
-        band_buckets,
-        band_buckets_md5,
-        minhash_signatures,
-        minhash_signatures_md5,
-    )
+    from ..operators.dedup import band_buckets_md5, minhash_signatures_md5
 
-    sig_fn = minhash_signatures_md5 if portable_md5 else minhash_signatures
-    bb_fn = band_buckets_md5 if portable_md5 else band_buckets
-    sigs = sig_fn(docs, text_col, id_col, num_perm, shingle_k)
-    banded = bb_fn(sigs, bands, num_perm // bands, id_col)
+    sigs = minhash_signatures_md5(docs, text_col, id_col, num_perm, shingle_k)
+    banded = band_buckets_md5(sigs, bands, num_perm // bands, id_col)
     if id_col != "doc_id":
         banded = banded.withColumnRenamed(id_col, "doc_id")
     if engine == "join":

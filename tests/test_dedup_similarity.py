@@ -29,7 +29,7 @@ def test_minhash_near_dups(spark):
     near = base.replace("today", "tomorrow")
     far = "completely unrelated text about spark shuffle partitions and arrow batches"
     docs = _docs(spark, [base, near, far])
-    pairs = dedup.minhash_lsh_candidates(docs, num_perm=64, bands=16).collect()
+    pairs = dedup.minhash_lsh_candidates_md5(docs, num_perm=64, bands=16).collect()
     found = {(r.doc_a, r.doc_b): r.est_jaccard for r in pairs}
     assert (0, 1) in found and found[(0, 1)] > 0.5
     assert (0, 2) not in found and (1, 2) not in found
@@ -37,36 +37,20 @@ def test_minhash_near_dups(spark):
 
 def test_minhash_identical_docs(spark):
     docs = _docs(spark, ["same tokens here exactly", "same tokens here exactly"])
-    pairs = dedup.minhash_lsh_candidates(docs).collect()
+    pairs = dedup.minhash_lsh_candidates_md5(docs).collect()
     assert len(pairs) == 1 and pairs[0].est_jaccard == 1.0
 
 
 def test_simhash_properties(spark):
     docs = _docs(spark, ["alpha beta gamma", "alpha beta gamma", "delta epsilon zeta"])
-    got = {r.doc_id: r.simhash for r in dedup.simhash(docs).collect()}
+    got = {r.doc_id: r.simhash_hex for r in dedup.simhash_md5(docs).collect()}
     assert got[0] == got[1] != got[2]
-
-
-def test_simhash_matches_dataframe_twin(spark):
-    """The zero-shuffle numpy simhash and the explode-based DataFrame
-    formulation share one hash family → identical signatures."""
-    texts = [
-        "the quick brown fox jumps over the lazy dog",
-        "alpha beta gamma delta epsilon",
-        "single",
-        "repeated repeated repeated tokens tokens",
-        "Mixed CASE and   extra   whitespace  ",
-    ]
-    docs = _docs(spark, texts)
-    fast = {r.doc_id: r.simhash for r in dedup.simhash(docs).collect()}
-    slow = {r.doc_id: r.simhash for r in dedup.simhash_dataframe(docs).collect()}
-    assert fast == slow
 
 
 def test_simhash_plan_has_no_shuffle(spark):
     """The scale path must be a narrow map: no exchange in the plan."""
     docs = _docs(spark, ["a b c", "d e f"])
-    plan = dedup.simhash(docs)._jdf.queryExecution().executedPlan().toString()
+    plan = dedup.simhash_md5(docs)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
 
 
@@ -79,12 +63,12 @@ def test_minhash_bucket_cap(spark):
     docs = _docs(spark, same + near)
     # cap below the degenerate bucket size: the 12-identical group's
     # buckets all blow the cap, so none of its 66 pairs emit
-    pairs = dedup.minhash_lsh_candidates(docs, max_bucket=8).collect()
+    pairs = dedup.minhash_lsh_candidates_md5(docs, max_bucket=8).collect()
     got = {(r.doc_a, r.doc_b) for r in pairs}
     assert (12, 13) in got
     assert all(a >= 12 for a, _ in got), got
     # default cap (unhit): all pairs emit
-    pairs_all = dedup.minhash_lsh_candidates(docs).collect()
+    pairs_all = dedup.minhash_lsh_candidates_md5(docs).collect()
     assert len(pairs_all) == 66 + 1
 
 
@@ -93,7 +77,7 @@ def test_minhash_pair_join_carries_no_signatures(spark):
     signatures re-attach after pair dedup (100-TB shuffle budget)."""
     docs = _docs(spark, ["a b c d", "a b c e"])
     plan = (
-        dedup.minhash_lsh_candidates(docs)
+        dedup.minhash_lsh_candidates_md5(docs)
         ._jdf.queryExecution()
         .optimizedPlan()
         .toString()
@@ -210,9 +194,8 @@ def test_simhash_md5_matches_hashlib_twin(spark):
 
 
 def test_minhash_md5_twin_near_dups(spark):
-    """The portable-hash MinHash twin must find the same near-dup
-    structure as the fast variant: identical docs at est 1.0, clear
-    near-dups surfaced, unrelated pairs absent."""
+    """Identical docs at est 1.0 next to a near-dup pair in one corpus:
+    clear near-dups surfaced, unrelated pairs absent."""
     base = "the quick brown fox jumps over the lazy dog again and again today"
     near = base.replace("today", "tomorrow")
     far = "completely unrelated text about spark shuffle partitions and arrow batches"
@@ -233,12 +216,9 @@ def test_null_text_does_not_crash_hash_ops(spark):
         [(0, "real text here"), (1, None), (2, "")],
         "doc_id long, text string",
     )
-    sh = {r.doc_id: r.simhash for r in dedup.simhash(docs).collect()}
-    assert sh[1] == 0 and sh[2] == 0 and sh[0] != 0
     shm = {r.doc_id: r.simhash_hex for r in dedup.simhash_md5(docs).collect()}
     assert shm[1] == "0" * 16 and shm[2] == "0" * 16 and shm[0] != "0" * 16
-    # minhash paths: just must not raise
-    dedup.minhash_lsh_candidates(docs).collect()
+    # minhash path: just must not raise
     dedup.minhash_lsh_candidates_md5(docs).collect()
 
 
@@ -305,9 +285,47 @@ def test_ngram_jaccard_ignores_non_candidate_docs(spark):
     assert abs(rows[0].jaccard - 0.5) < 1e-12
 
 
+def _minhash_md5_expr_reference(docs, num_perm=64, k=3, seed=42):
+    """The engine-side spelling of minhash_signatures_md5 — tokenize
+    (split/lower/trim), shingle and md5 as higher-order functions, a
+    pandas UDF only parsing hex — the form whose every step has a direct
+    SQL spelling (the DuckDB oracle's). Reference for the Arrow kernel."""
+    import pandas as pd
+    from pyspark.sql.types import ArrayType, LongType
+
+    rng = np.random.RandomState(seed)
+    p = (1 << 61) - 1
+    a = rng.randint(1, p, size=num_perm, dtype=np.int64).astype(np.uint64)
+    b = rng.randint(0, p, size=num_perm, dtype=np.int64).astype(np.uint64)
+    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    shingles = F.when(
+        F.size(toks) >= k,
+        F.transform(
+            F.sequence(F.lit(0), F.size(toks) - k),
+            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)),
+        ),
+    ).otherwise(F.array(F.concat_ws(" ", toks)))
+    hexes = F.transform(shingles, lambda s: F.substring(F.md5(s), 1, 16))
+
+    @F.pandas_udf(ArrayType(LongType()))
+    def sig_udf(hex_lists: pd.Series) -> pd.Series:
+        sigs = []
+        for hl in hex_lists:
+            hl = list(hl) if hl is not None else []
+            if not hl:
+                sigs.append([0] * num_perm)
+                continue
+            x = dedup._hex16_to_uint64(hl)
+            vals = (a[:, None] * x[None, :] + b[:, None]) % np.uint64(p)
+            sigs.append(vals.min(axis=1).astype(np.int64).tolist())
+        return pd.Series(sigs)
+
+    return docs.select(F.col("doc_id"), sig_udf(hexes).alias("sig"))
+
+
 def test_minhash_md5_arrow_kernel_equivalence(spark):
-    """r8: the Arrow md5-signature kernel must emit EXACTLY the
-    expression kernel's signatures — corpus slice plus crafted
+    """The Arrow md5-signature kernel must emit EXACTLY the
+    engine-side reference's signatures — corpus slice plus crafted
     whitespace/short/degenerate docs."""
     from rdf_to_text_spark.operators.dedup import minhash_signatures_md5
 
@@ -325,15 +343,28 @@ def test_minhash_md5_arrow_kernel_equivalence(spark):
     ).unionByName(spark.createDataFrame(crafted, "doc_id long, text string"))
     a = {
         (r.doc_id, tuple(r.sig))
-        for r in minhash_signatures_md5(docs, kernel="expr").collect()
+        for r in _minhash_md5_expr_reference(docs).collect()
     }
     b = {
         (r.doc_id, tuple(r.sig))
-        for r in minhash_signatures_md5(docs, kernel="arrow").collect()
+        for r in minhash_signatures_md5(docs).collect()
     }
     assert a == b and len(a) > 0
 
-    import pytest as _pytest
 
-    with _pytest.raises(ValueError, match="kernel"):
-        minhash_signatures_md5(docs, kernel="nope").collect()
+def test_local_checkpoint_handle_frees_blocks(spark):
+    """The release handle ngram_jaccard hands to `cleanup` must really
+    drop the checkpoint RDD's blocks: a plain DataFrame.unpersist() does
+    not, and the handle reaches the RDD through private py4j surface."""
+    df = spark.range(100).localCheckpoint(eager=True)
+    rdd_id = df._jdf.queryExecution().analyzed().rdd().id()
+    jsc = spark.sparkContext._jsc
+
+    def cached_ids():
+        return {info.id() for info in jsc.sc().getRDDStorageInfo()}
+
+    assert rdd_id in set(jsc.getPersistentRDDs().keySet())
+    assert rdd_id in cached_ids()
+    dedup._LocalCheckpointHandle(df).unpersist()
+    assert rdd_id not in set(jsc.getPersistentRDDs().keySet())
+    assert rdd_id not in cached_ids()

@@ -2,9 +2,9 @@
 
 Invariants pinned here:
   * stream ≡ batch — on a corpus where no bucket exceeds the cap, the
-    distinct streamed candidate set equals minhash_lsh_candidates'
+    distinct streamed candidate set equals minhash_lsh_candidates_md5'
     pair set for identical parameters (same signatures, same buckets:
-    operators/dedup.py:band_buckets is shared verbatim);
+    operators/dedup.py:band_buckets_md5 is shared verbatim);
   * state genuinely accumulates — cross-micro-batch pairs exist (a
     planted near-dup pair is split across two input files);
   * prefix cap — once a bucket holds max_bucket ids, later arrivals
@@ -65,7 +65,7 @@ def test_stream_equals_batch_and_accumulates(spark):
     assert n_batches >= 2  # multiple micro-batches actually ran
     batch = {
         (r.doc_a, r.doc_b)
-        for r in dedup.minhash_lsh_candidates(docs, num_perm=64, bands=16).collect()
+        for r in dedup.minhash_lsh_candidates_md5(docs, num_perm=64, bands=16).collect()
     }
     assert got == batch
     assert len(got) >= 12  # every planted twin collides

@@ -262,8 +262,49 @@ def test_winnow_match_pairs_shared_run_and_cap(spark):
     assert winnow_match_pairs(many, k=5, w=8, max_docs_per_fp=4).count() == 0
 
 
+def _winnow_expr_reference(docs, k, w):
+    """The fully engine-side spelling of winnow_fingerprints — the form
+    the DuckDB oracle replays: one narrow projection (tokenize,
+    shingle-hash as a transform over a sequence, per-window rightmost
+    argmin as a zip_with over window starts, distinct, explode). Zero
+    shuffle, zero Python. Reference for the Arrow kernel."""
+    from pyspark.sql import functions as F
+
+    toks = F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda t: t != F.lit(""))
+    d = docs.select(F.col("doc_id"), toks.alias("toks")).filter(F.size("toks") >= k)
+    # hv[i] = 32-bit slot of md5(space-joined shingle at 0-based i)
+    hv = F.transform(
+        F.sequence(F.lit(0), F.size("toks") - k),
+        lambda i: F.conv(
+            F.substring(F.md5(F.concat_ws(" ", F.slice("toks", i + 1, k))), 1, 8),
+            16,
+            10,
+        ).cast("long"),
+    )
+    d = d.select("doc_id", hv.alias("hv"))
+    m = F.size("hv")
+    eff = F.least(F.lit(w), m)  # short docs: one window of all shingles
+    starts = F.sequence(F.lit(0), F.greatest(m - w, F.lit(0)))
+    wmins = F.transform(starts, lambda j: F.array_min(F.slice("hv", j + 1, eff)))
+    # rightmost position of the window minimum, per window start
+    sel = F.array_distinct(
+        F.zip_with(
+            starts,
+            wmins,
+            lambda j, mn: F.array_max(
+                F.filter(F.sequence(j, j + eff - 1), lambda p: F.get("hv", p) == mn)
+            ),
+        )
+    )
+    return d.select("doc_id", "hv", F.explode(sel).alias("pos")).select(
+        "doc_id",
+        F.col("pos").cast("long").alias("pos"),
+        F.get("hv", "pos").alias("fp"),
+    )
+
+
 def test_winnow_arrow_kernel_equivalence(spark):
-    # the Arrow fast path must emit EXACTLY the expression kernel's
+    # the Arrow kernel must emit EXACTLY the engine-side reference's
     # rows — corpus slice plus crafted short/degenerate/whitespace docs
     from rdf_to_text_spark.operators.text_analysis import winnow_fingerprints
 
@@ -279,24 +320,18 @@ def test_winnow_arrow_kernel_equivalence(spark):
     ).unionByName(spark.createDataFrame(crafted, "doc_id long, text string"))
     a = {
         (r.doc_id, r.pos, r.fp)
-        for r in winnow_fingerprints(docs, k=5, w=8, kernel="expr").collect()
+        for r in _winnow_expr_reference(docs, k=5, w=8).collect()
     }
     b = {
         (r.doc_id, r.pos, r.fp)
-        for r in winnow_fingerprints(docs, k=5, w=8, kernel="arrow").collect()
+        for r in winnow_fingerprints(docs, k=5, w=8).collect()
     }
     assert a == b and len(a) > 0
 
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="kernel"):
-        winnow_fingerprints(docs, kernel="nope")
-
 
 def test_winnow_arrow_custom_id_col_and_null_id(spark):
-    """ADVICE r7: the arrow kernel must emit the SAME 'doc_id' output
-    column as the expr kernel whatever the input id column is named,
-    and must skip NULL-id rows instead of crashing."""
+    """The kernel must emit a 'doc_id' output column whatever the input
+    id column is named, and must skip NULL-id rows instead of crashing."""
     from rdf_to_text_spark.operators.text_analysis import winnow_fingerprints
 
     docs = spark.createDataFrame(
@@ -304,7 +339,7 @@ def test_winnow_arrow_custom_id_col_and_null_id(spark):
          (None, "this row has a null id and must be skipped not crash ok")],
         "page_id long, text string",
     )
-    out = winnow_fingerprints(docs, id_col="page_id", kernel="arrow")
+    out = winnow_fingerprints(docs, id_col="page_id")
     assert out.columns == ["doc_id", "pos", "fp"]
     rows = out.collect()
     assert rows and all(r.doc_id == 1 for r in rows)
