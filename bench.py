@@ -334,6 +334,10 @@ def main() -> None:
             (stat1[0] - stat0[0]) / (stat1[1] - stat0[1]), 4
         )
 
+    # the heap this run had: get_spark derives it from the host unless
+    # SPARK_DRIVER_MEMORY is set
+    extras["driver_memory"] = spark.conf.get("spark.driver.memory")
+
     total = round(sum(timings.values()), 3)
     out = {
         "metric": "headline_queries_wall_sec",

@@ -4,11 +4,17 @@ north_rule: canonical (subj, pred, obj) triples are MERGEd into entity
 and edge tables partitioned by subject hash bucket; per-partition
 lineage + metrics rows make the job exactly resumable.
 
-The sink is :class:`BucketedParquetMerge`: Hive-style ``bucket``
-partition columns + dynamic partition-overwrite, which gives the
-idempotence of a ``MERGE INTO`` on (subj, pred, obj) (re-running a
-chunk rewrites exactly its own buckets, never duplicating rows) because
-the chunk → bucket mapping is deterministic.
+The sink is :class:`BucketedParquetMerge`: one Hive-style ``chunk``
+partition per input chunk, written with dynamic partition-overwrite,
+which gives the idempotence of a ``MERGE INTO`` on (subj, pred, obj):
+re-running a chunk replaces exactly its own ``chunk=<k>`` directory,
+never duplicating rows, because a chunk's triples are a deterministic
+function of its pages. The subject hash bucket
+``pmod(xxhash64(subj), n_buckets)`` is a column, not a directory level:
+each write task emits one file whose rows are sorted by ``bucket``, so
+at scale a ``bucket = k`` reader can skip row groups by their min/max
+statistics, while a chunk costs one file per task instead of one per
+(task, bucket).
 
 Resumability protocol (reference analog: best-checkpoint save/restore,
 `main_PG.py:210-218`; skip-counter lineage, `build_dataset.py:269-272`):
@@ -42,7 +48,8 @@ class BucketedParquetMerge:
     """Parquet fallback with MERGE-equivalent idempotence.
 
     Triples land under ``base/edges/chunk=<id>/`` (dynamic partition
-    overwrite); the canonical edge table is the union of chunk
+    overwrite), one file per write task with rows sorted by the
+    ``bucket`` column; the canonical edge table is the union of chunk
     partitions deduped on (subj, pred, obj) at read time via a view.
     Because chunk contents are a deterministic function of the input
     chunk, re-writing a chunk is idempotent.
@@ -82,10 +89,13 @@ class BucketedParquetMerge:
             .withColumn("chunk", F.lit(chunk_id))
             .withColumn("bucket", F.pmod(F.xxhash64("subj"), F.lit(self.n_buckets)))
         )
+        # sorting on the partition column first satisfies the writer's
+        # required ordering, so it keeps the bucket order instead of
+        # re-sorting each task's rows on `chunk` alone
         (
-            out.repartition("bucket")
+            out.sortWithinPartitions("chunk", "bucket")
             .write.mode("overwrite")
-            .partitionBy("chunk", "bucket")
+            .partitionBy("chunk")
             .parquet(f"{self.base}/edges")
         )
         n_triples = obs.get["n_triples"]
@@ -107,11 +117,15 @@ class BucketedParquetMerge:
         )
 
     def entities(self) -> DataFrame:
-        """Entity table derived from edges (id = stable hash of name)."""
-        e = self.edges()
-        names = e.select(F.col("subj").alias("canonical")).unionByName(
-            e.select(F.col("obj").alias("canonical"))
-        ).distinct()
+        """Entity table: the distinct subject and object names of the
+        chunk files (id = stable hash of name). Names are taken straight
+        from the files, since deduplicating (subj, pred, obj) first, as
+        `edges` does, cannot change the set of names."""
+        names = (
+            self.spark.read.parquet(f"{self.base}/edges")
+            .select(F.explode(F.array("subj", "obj")).alias("canonical"))
+            .distinct()
+        )
         return names.withColumn("entity_id", F.abs(F.xxhash64("canonical")))
 
     def lineage(self) -> DataFrame:
@@ -150,6 +164,8 @@ def run_resumable(
 
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
     extract = extract or (lambda df: extract_pipeline(df, use_html=True))
     sink = BucketedParquetMerge(spark, base)
     done = [r.chunk_id for r in sink.committed_chunks().collect()]
@@ -185,10 +201,15 @@ def run_resumable(
         # commits disjoint chunk=<id>/ partition dirs, so concurrent chunk
         # writes never touch the same destination. Job descriptions are
         # thread-local, so the UI labels each chunk correctly. Result
-        # order stays chunk-id-sorted (pool.map preserves input order).
+        # order stays chunk-id-sorted (futures are read in input order).
         # A failed chunk raises only after the pool has drained, so every
         # other chunk still commits before ``_staging`` goes.
+        # Each chunk's target is wrapped here, in the caller's thread, so
+        # its jobs carry the caller's job group, tags and local
+        # properties; one wrap per chunk gives each its own copy of the
+        # properties, which `_one`'s description then overrides.
         with ThreadPoolExecutor(max_workers=4) as pool:
-            return list(pool.map(_one, todo))
+            futures = [pool.submit(inheritable_thread_target(spark)(_one), cid) for cid in todo]
+            return [f.result() for f in futures]
     finally:
         fs.delete(staging_path, True)

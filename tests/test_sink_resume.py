@@ -5,6 +5,7 @@ import os
 import shutil
 import tempfile
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -94,3 +95,38 @@ def test_failed_chunk_in_pool_resumes_exactly(spark, base_dir):
         assert _edge_set(sink) == _edge_set(BucketedParquetMerge(spark, clean_dir))
     finally:
         shutil.rmtree(clean_dir, ignore_errors=True)
+
+
+def test_chunk_files_are_bucket_sorted(spark, base_dir):
+    """One file per chunk task, rows sorted by their subject hash bucket:
+    `bucket` is a column inside the chunk files, not a directory level."""
+    run_resumable(spark, fixtures.pages_from_range(spark, 200), base_dir, n_chunks=2)
+    assert sorted(glob.glob("chunk=*", root_dir=f"{base_dir}/edges")) == ["chunk=0", "chunk=1"]
+    assert not glob.glob(f"{base_dir}/edges/chunk=*/bucket=*")
+
+    edges = spark.read.parquet(f"{base_dir}/edges")
+    assert edges.count() > 0
+    assert edges.filter(F.col("bucket") != F.pmod(F.xxhash64("subj"), F.lit(16))).count() == 0
+
+    files = glob.glob(f"{base_dir}/edges/chunk=*/*.parquet")
+    assert files
+    for path in files:
+        buckets = pq.read_table(path, columns=["bucket"]).column("bucket").to_pylist()
+        assert buckets == sorted(buckets), path
+
+
+def test_chunk_jobs_carry_callers_job_group(spark, base_dir):
+    """The chunk pool's jobs inherit the caller's job group, so every job
+    run_resumable starts can be found (and cancelled) by that group."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    pages = fixtures.pages_from_range(spark, 200)
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("resumable-under-test", "run_resumable job group")
+    try:
+        run_resumable(spark, pages, base_dir, n_chunks=2)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert tracker.getJobIdsForGroup("resumable-under-test")
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped_before == set()
