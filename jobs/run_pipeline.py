@@ -91,7 +91,7 @@ def main() -> int:
     args = ap.parse_args()
 
     from rdf_to_text_spark import fixtures
-    from rdf_to_text_spark.session import get_spark
+    from rdf_to_text_spark.session import get_spark, local_frame
     from rdf_to_text_spark.sinks.merge import BucketedParquetMerge, run_resumable
 
     spark = get_spark(app_name="kg_pipeline", master=args.master)
@@ -269,16 +269,16 @@ def main() -> int:
         )
 
         edges = sink.edges()
-        ents = spark.createDataFrame(
-            [(e,) for e in entity_like_names()], "entity string"
+        ents = local_frame(
+            spark, [(e,) for e in entity_like_names()], "entity string"
         )
         inc = edges.select("doc_id", F.col("subj").alias("entity")).unionByName(
             edges.join(F.broadcast(ents), edges["obj"] == ents["entity"], "leftsemi")
             .select("doc_id", F.col("obj").alias("entity"))
         )
         prior = capped_entity_pairs(inc, cap=4)
-        cands = spark.createDataFrame(
-            first_token_candidates(), "mention string, entity string"
+        cands = local_frame(
+            spark, first_token_candidates(), "mention string, entity string"
         )
         mentions = edges.filter(F.col("obj_surface").isNotNull()).select(
             "doc_id",

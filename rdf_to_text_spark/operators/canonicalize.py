@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def first_token_clusters(surfaces: DataFrame, surface_col: str = "surface") -> DataFrame:
     """(surface, rep) — representative = lexicographic min among
@@ -204,9 +206,10 @@ def connected_components(
     distributed round still costs fixed job/shuffle latency. When the
     checkpointed edge set drops to ≤ `local_finish_threshold` rows
     (~1.6 MB at the default), the remainder is collected and finished
-    with driver-side union-find — identical output (components are
-    invariant under contraction; fuzz-tested vs union-find), without
-    the long tail of tiny iterations. Set the threshold to 0 to force
+    with driver-side union-find, returned as an Arrow local relation
+    (``session.local_frame``, no Python RDD) — identical output
+    (components are invariant under contraction; fuzz-tested vs
+    union-find), without the long tail of tiny iterations. Set the threshold to 0 to force
     the fully-distributed path.
     """
     e = (
@@ -221,7 +224,7 @@ def connected_components(
 
     def _finish_locally(cur: DataFrame) -> DataFrame:
         comp = _local_union_find([(r.src, r.dst) for r in cur.collect()])
-        return spark.createDataFrame(comp, "node long, component long")
+        return local_frame(spark, comp, "node long, component long")
 
     # each round scans `e` ~3× (both star directions + small-star), so the
     # canonical input is checkpointed before iterating

@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, LongType
 
+from ..session import local_frame
+
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
@@ -142,7 +144,7 @@ def ivf_topk(
     # query → n_probe nearest centroids, engine-side (centroids are tiny)
     spark = corpus.sparkSession
     cent_rows = [(i, [float(x) for x in ctr]) for i, ctr in enumerate(centers)]
-    cent = spark.createDataFrame(cent_rows, "cell int, center array<double>")
+    cent = local_frame(spark, cent_rows, "cell int, center array<double>")
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("qv"),

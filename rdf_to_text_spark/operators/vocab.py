@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 SPECIALS = ["<pad>", "<start>", "<end>", "<unk>", "A0", "A1", "NE"]
 
 
@@ -59,7 +61,9 @@ def build_vocab(
         counts, [F.col("cnt").desc(), F.col("word")], rn_col="_rn", cleanup=cleanup
     ).withColumn("vocab_id", (F.col("_rn") + len(SPECIALS) - 1).cast("int")).drop("_rn")
     spark = lines.sparkSession
-    specials = spark.createDataFrame(
-        [(tok, 0, i) for i, tok in enumerate(SPECIALS)], "word string, cnt long, vocab_id int"
+    specials = local_frame(
+        spark,
+        [(tok, 0, i) for i, tok in enumerate(SPECIALS)],
+        "word string, cnt long, vocab_id int",
     )
     return specials.unionByName(ranked.select("word", F.col("cnt").cast("long"), "vocab_id"))

@@ -24,6 +24,7 @@ from . import fixtures, fixtures_struct, fixtures_web
 from .operators import delex, dedup, evalmetrics, graph, similarity, text_analysis, vocab
 from .operators.canonicalize import connected_components, first_token_clusters
 from .pipeline import extract_pipeline
+from .session import local_frame
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -652,7 +653,7 @@ def kg_relation2id(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = _triples(spark, sf_dir).select("pred").distinct()
     w = Window.orderBy("pred")
     ranked = t.withColumn("rel_id", F.row_number().over(w))
-    none_row = t.sparkSession.createDataFrame([("None", 0)], "pred string, rel_id int")
+    none_row = local_frame(t.sparkSession, [("None", 0)], "pred string, rel_id int")
     return ranked.unionByName(none_row)
 
 
@@ -1321,7 +1322,7 @@ def dedup_minhash_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     if max_bucket is not None and max_bucket > 128:
         raise RuntimeError(f"over-cap bucket ({max_bucket}) — stream≡batch precondition broken")
-    return spark.createDataFrame(pairs, "doc_a long, doc_b long")
+    return local_frame(spark, pairs, "doc_a long, doc_b long")
 
 
 @_register_extra(
@@ -3793,8 +3794,8 @@ def stream_entity_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.catalog.dropTempView(qname)
     if len(final) and int(final["b"].max()) < 2:
         raise RuntimeError("state did not accumulate across micro-batches")
-    out = spark.createDataFrame(
-        final[["entity", "total_mentions"]], "entity string, total_mentions long"
+    out = local_frame(
+        spark, final[["entity", "total_mentions"]], "entity string, total_mentions long"
     )
     return out
 
@@ -3929,7 +3930,8 @@ def xml_corpus_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat_ws(",", F.transform("mtriples", lambda t: t["s"])).alias("subjs"),
         ).toPandas(),
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         "eid string, category string, size string, n_triples int, "
         "n_lexs int, preds string, subjs string",
@@ -3965,7 +3967,8 @@ def xml_lexcount_by_size_category(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         .toPandas(),
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out,
         "size string, category string, n_entries long, total_lexcount long",
     )
@@ -4001,7 +4004,7 @@ def xml_property_map(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("mpred", F.explode("opreds").alias("opred"))
         .toPandas(),
     )
-    return spark.createDataFrame(out, "mpred string, opred string")
+    return local_frame(spark, out, "mpred string, opred string")
 
 
 @_register_extra(
@@ -4047,8 +4050,8 @@ def vocab_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     by_id = sorted(word2id.items(), key=lambda kv: kv[1])
     if [w for w, _ in by_id] != id2word:
         raise RuntimeError("id2word list is not the id-order of word2id")
-    return spark.createDataFrame(
-        [(w, int(i)) for w, i in word2id.items()], "word string, vocab_id int"
+    return local_frame(
+        spark, [(w, int(i)) for w, i in word2id.items()], "word string, vocab_id int"
     )
 
 
@@ -4105,7 +4108,7 @@ def multiref_files_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(out, "src string, ref_idx int, ref string")
+    return local_frame(spark, out, "src string, ref_idx int, ref string")
 
 
 @_register_extra(
@@ -4148,7 +4151,7 @@ def aligned_lines_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(out, "line_id int, triple string, lex string")
+    return local_frame(spark, out, "line_id int, triple string, lex string")
 
 
 # ===================================================== web-page front end
@@ -4443,7 +4446,8 @@ def web_robots_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     urls = page_urls.unionByName(about_urls)
     rules = robots_rules(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [("synth.example", fixtures_web.ROBOTS_TXT)],
             "host string, robots_txt string",
         )
@@ -4851,7 +4855,7 @@ def web_sitemap_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
         pdf = sitemap_crawl_gap(urls, crawl).toPandas()
     finally:
         shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(pdf[["url", "status"]], "url string, status string")
+    return local_frame(spark, pdf[["url", "status"]], "url string, status string")
 
 
 @_register_extra("web_fetch_schedule", fixtures_web.fetch_schedule_sql())
@@ -4875,8 +4879,9 @@ def web_fetch_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
         crawl = _sitemap_fixture_crawl(spark, sf_dir)
         gap = sitemap_crawl_gap(urls, crawl).filter(F.col("status") != "fresh")
         rules = robots_rules(
-            spark.createDataFrame(
-                [("synth.example", fixtures_web.ROBOTS_TXT)],
+            local_frame(
+                spark,
+            [("synth.example", fixtures_web.ROBOTS_TXT)],
                 "host string, robots_txt string",
             )
         )
@@ -4888,7 +4893,7 @@ def web_fetch_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     finally:
         shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(pdf[["url", "reason"]], "url string, reason string")
+    return local_frame(spark, pdf[["url", "reason"]], "url string, reason string")
 
 
 @_register("kg_multimodal_kg", fixtures_struct.multimodal_kg_sql())
@@ -5158,8 +5163,8 @@ def _entity_incidence(spark: SparkSession, t: DataFrame) -> DataFrame:
     semi-probe against the dictionary-sized KB node set."""
     from .templates import entity_like_names
 
-    ents = spark.createDataFrame(
-        [(e,) for e in entity_like_names()], "entity string"
+    ents = local_frame(
+        spark, [(e,) for e in entity_like_names()], "entity string"
     )
     subj_inc = t.select("doc_id", F.col("subj").alias("entity"))
     obj_inc = t.join(
@@ -5221,8 +5226,8 @@ def kg_link_prior(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     t = _triples(spark, sf_dir)
     prior = capped_entity_pairs(_entity_incidence(spark, t), cap=4)
-    cands = spark.createDataFrame(
-        first_token_candidates(), "mention string, entity string"
+    cands = local_frame(
+        spark, first_token_candidates(), "mention string, entity string"
     )
     surface = F.lower(F.element_at(F.split("obj_surface", " "), 1))
     mentions = t.select(
@@ -5521,7 +5526,8 @@ def text_length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         cleanup=_CLEANUPS,
     )
     n = ranked.count()  # one scalar to the driver
-    qs = spark.createDataFrame(
+    qs = local_frame(
+        spark,
         [("p50", 50, 100), ("p90", 90, 100), ("p99", 99, 100)],
         "quantile string, num int, den int",
     )
@@ -5773,8 +5779,8 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges = text_analysis.bpe_learn_merges(
         _docs(spark, sf_dir).filter(F.trim("text") != ""), n_merges=20
     )
-    return spark.createDataFrame(
-        merges, "step int, lft string, rgt string, n long"
+    return local_frame(
+        spark, merges, "step int, lft string, rgt string, n long"
     )
 
 
@@ -5963,8 +5969,8 @@ def kg_schema_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .templates import entity_like_names
 
     t = _triples(spark, sf_dir)
-    ents = spark.createDataFrame(
-        [(e,) for e in entity_like_names()], "entity string"
+    ents = local_frame(
+        spark, [(e,) for e in entity_like_names()], "entity string"
     )
     out_deg = (
         t.groupBy("pred", "subj")

@@ -14,13 +14,17 @@ once it has been generated.
 
 The driver heap defaults to half of physical memory, capped at 24g, so
 local mode never asks for a heap the host cannot back.
+
+Small driver-side frames (lineage rows, constant tables, driver-side
+finishes) are built with :func:`local_frame`, never from a Python list.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DRIVER_MEMORY_CAP_MB = 24 * 1024
 
@@ -82,3 +86,46 @@ def get_spark(
     )
     builder = builder.master(master or f"local[{cpus}]")
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema: "str | StructType") -> DataFrame:
+    """A small driver-side frame as an Arrow-backed ``LocalRelation``.
+
+    `rows` is a sequence of tuples (positional, like
+    ``spark.createDataFrame(rows, schema)``) or a pandas DataFrame, whose
+    columns are also taken by position; `schema` is a DDL string or a
+    StructType.
+
+    Why not ``spark.createDataFrame(rows, schema)``: a list-built frame
+    (and an empty pandas one) is planned as ``Scan ExistingRDD`` over a
+    Python RDD, so every action on it starts Python workers from a
+    second ``pyspark.daemon`` pool, apart from the one the session's
+    Arrow UDFs use (~0.4 s of Python CPU per action, and the pool's
+    resident memory for the rest of the session). A ``pyarrow.Table``
+    goes to the JVM once and is planned as ``LocalTableScan``, whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says.
+    """
+    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
+    arrow_schema = to_arrow_schema(struct)
+    n = len(struct.fields)
+    is_pandas = isinstance(rows, pd.DataFrame)
+    if is_pandas:
+        if rows.shape[1] != n:
+            raise ValueError(f"{rows.shape[1]} columns for a {n}-field schema")
+        columns = [rows.iloc[:, i] for i in range(n)]
+    else:
+        rows = list(rows)
+        if any(len(r) != n for r in rows):
+            raise ValueError(f"every row must have {n} fields")
+        columns = [[r[i] for r in rows] for i in range(n)]
+    # pandas NaN/None are nulls, as on Spark's own Arrow path; a list's NaN stays NaN
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type, from_pandas=is_pandas) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)

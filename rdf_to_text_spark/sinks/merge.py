@@ -20,9 +20,11 @@ Resumability protocol (reference analog: best-checkpoint save/restore,
 `main_PG.py:210-218`; skip-counter lineage, `build_dataset.py:269-272`):
   1. the driver stages the pages of uncommitted chunks once, as parquet
      partitioned by ``chunk_id = pmod(doc_id, n)`` under ``base/_staging``;
-  2. each chunk job reads its own partition and commits its triples
-     *and* a lineage row ``(chunk_id, n_pages, n_triples, n_dropped,
-     wall_sec)`` in the same write;
+  2. each chunk job reads its own partition and commits its triples,
+     then a lineage row ``(chunk_id, n_pages, n_triples, n_dropped,
+     wall_sec)`` under ``lineage/chunk=<k>``; the row is built on the
+     driver as an Arrow local relation (``session.local_frame``), so
+     writing it starts no Python workers;
   3. on restart, committed chunks are left out of staging → only
      unfinished chunks re-run; re-running a finished chunk is a no-op
      overwrite of identical data.
@@ -34,6 +36,8 @@ import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from ..session import local_frame
 
 LINEAGE_SCHEMA = "chunk_id long, n_pages long, n_triples long, n_dropped long, wall_sec double"
 
@@ -63,11 +67,12 @@ class BucketedParquetMerge:
 
     # ---------------------------------------------------------- lineage
     def committed_chunks(self) -> DataFrame:
-        """Only a missing lineage dir means "none committed"; any other
-        read error propagates rather than re-running every chunk."""
+        """Only a missing lineage dir means "none committed" (an empty
+        local frame); any other read error propagates rather than
+        re-running every chunk."""
         fs, path = _hadoop_path(self.spark, f"{self.base}/lineage")
         if not fs.exists(path):
-            return self.spark.createDataFrame([], "chunk_id long")
+            return local_frame(self.spark, [], "chunk_id long")
         return self.lineage().select("chunk_id").distinct()
 
     # ------------------------------------------------------------ write
@@ -81,7 +86,11 @@ class BucketedParquetMerge:
         which would re-execute the whole extraction stage per chunk
         (at scale that doubles the dominant cost of the job).
         `n_pages` may likewise be an Observation planted on the chunk's
-        input DataFrame; it is read after the same single pass."""
+        input DataFrame; it is read after the same single pass.
+
+        The lineage row is a `local_frame`, a ``LocalTableScan``: a
+        list-built row would be a Python RDD whose write runs Python
+        workers from a second daemon pool."""
         t0 = time.time()
         obs = Observation(f"chunk_{chunk_id}_triples")
         out = (
@@ -103,7 +112,7 @@ class BucketedParquetMerge:
             n_pages = n_pages.get["n_pages"]
         wall = time.time() - t0
         row = [(chunk_id, n_pages, n_triples, 0, wall)]
-        self.spark.createDataFrame(row, LINEAGE_SCHEMA).withColumn(
+        local_frame(self.spark, row, LINEAGE_SCHEMA).withColumn(
             "chunk", F.lit(chunk_id)
         ).write.mode("overwrite").partitionBy("chunk").parquet(f"{self.base}/lineage")
         return {"chunk_id": chunk_id, "n_pages": n_pages, "n_triples": n_triples, "wall_sec": wall}

@@ -177,6 +177,18 @@ def test_connected_components_chain(spark):
     assert len(got) == 31
 
 
+def test_cc_local_finish_scans_locally(spark):
+    """A graph under the local-finish threshold comes back as an Arrow
+    local relation, not a Python RDD scan."""
+    edges = spark.range(4).selectExpr("id AS src", "id + 1 AS dst")
+    stats = {}
+    cc = connected_components(edges, stats=stats)
+    assert stats["local_finish"]
+    plan = cc._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    assert sorted(map(tuple, cc.collect())) == [(n, 0) for n in range(5)]
+
+
 def test_alias_clusters_paren_leading_surfaces(spark):
     """Surfaces with an EMPTY pre-paren base (paren-leading titles) must
     not all collapse into one ''-keyed cluster (review regression)."""

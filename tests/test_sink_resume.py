@@ -130,3 +130,34 @@ def test_chunk_jobs_carry_callers_job_group(spark, base_dir):
             sc.setLocalProperty(key, None)
     assert tracker.getJobIdsForGroup("resumable-under-test")
     assert set(tracker.getJobIdsForGroup(None)) - ungrouped_before == set()
+
+
+def _sql_plans(spark, action) -> list[str]:
+    """Physical plans of the SQL executions that `action` runs."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions():
+        bus.waitUntilEmpty()
+        ex = store.executionsList()
+        return {ex.apply(i).executionId(): ex.apply(i) for i in range(ex.size())}
+
+    before = set(executions())
+    action()
+    return [e.physicalPlanDescription() for i, e in sorted(executions().items()) if i not in before]
+
+
+def test_lineage_frames_scan_locally(spark, base_dir):
+    """A fresh sink's empty committed-chunks frame and the lineage row
+    are Arrow local relations, not Python RDD scans."""
+    sink = BucketedParquetMerge(spark, base_dir)
+    fresh = sink.committed_chunks()._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in fresh and "ExistingRDD" not in fresh
+
+    triples = spark.range(3).selectExpr("CAST(id AS STRING) AS subj", "'p' AS pred", "'o' AS obj")
+    plans = _sql_plans(spark, lambda: sink.write_chunk(0, triples, 3))
+    lineage = [p for p in plans if f"{base_dir}/lineage" in p]
+    assert len(lineage) == 1, plans
+    assert "LocalTableScan" in lineage[0] and "ExistingRDD" not in lineage[0]
+    rows = sink.lineage().select("chunk_id", "n_pages", "n_triples", "n_dropped").collect()
+    assert [tuple(r) for r in rows] == [(0, 3, 3, 0)]
