@@ -137,7 +137,7 @@ import json, sys, time, zlib
 from rdf_to_text_spark.pipeline import extract_pipeline
 from rdf_to_text_spark.operators.structdata import structdata_counts, structdata_facts
 from rdf_to_text_spark.operators.webtext import extract_triples_from_rich_html
-from rdf_to_text_spark.session import get_spark
+from rdf_to_text_spark.session import get_spark, local_frame
 
 cpus, pages_path, n_docs, mode = (
     int(sys.argv[1]), sys.argv[2], int(sys.argv[3]), sys.argv[4])
@@ -153,7 +153,8 @@ if mode in ("link_skew", "link_uniform"):
 
     ents = [f"m{k}_c{j}" for k in range(50) for j in range(4)]
     det = lambda *xs: zlib.crc32("|".join(xs).encode()) % 7 + 1
-    cands = spark.createDataFrame(
+    cands = local_frame(
+        spark,
         [(f"m{k}", f"m{k}_c{j}") for k in range(50) for j in range(4)],
         "mention string, entity string")
     prior_rows = []
@@ -161,8 +162,9 @@ if mode in ("link_skew", "link_uniform"):
         for a in ["United_States"] + [f"E{i}" for i in range(0, 5000, 20)]:
             e1, e2 = sorted((c, a))
             prior_rows.append((e1, e2, det(c, a)))
-    prior = spark.createDataFrame(prior_rows, "e1 string, e2 string, n_docs long")
-    anch = spark.createDataFrame(
+    prior = local_frame(spark, prior_rows, "e1 string, e2 string, n_docs long")
+    anch = local_frame(
+        spark,
         [(f"m{k}", f"m{k}_c{j}", det("a", f"m{k}", str(j)))
          for k in range(50) for j in range(4)],
         "mention string, entity string, n_refs long")

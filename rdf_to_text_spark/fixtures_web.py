@@ -22,6 +22,7 @@ Same three-way contract as `fixtures.py`:
 
 from __future__ import annotations
 
+import re
 from typing import Iterator
 
 import pandas as pd
@@ -55,6 +56,23 @@ _SCRIPT_TMPL = (
     '<script type="text/javascript">var n = %d; '
     'if (n < 9999 && n >= 0) { console.log("skip &amp; ignore"); }</script>'
 )
+
+
+_TAG_OPEN = re.compile(r"<(/?)([a-z][a-z0-9]*)")
+_PLAIN_QUOTED = re.compile(r'="([^"\s>]*)"')
+
+
+def loosen_markup_py(html: bytes) -> bytes:
+    """The same page in legacy spelling: uppercase tag names and
+    attribute values unquoted wherever the HTML grammar allows it
+    (no whitespace or '>' in the value). Every extractor view is
+    unchanged (tag and attribute names fold to lowercase), but none of
+    the page's tags is in the lowercase, quoted form that
+    `functions/htmltext.py`'s one-regex tag scan takes, so it times and
+    tests the per-tag walk."""
+    s = html.decode("utf-8")
+    s = _TAG_OPEN.sub(lambda m: f"<{m[1]}{m[2].upper()}", s)
+    return _PLAIN_QUOTED.sub(r"=\1", s).encode("utf-8")
 
 
 def render_rich_page_py(doc_id: int) -> dict:

@@ -24,8 +24,19 @@ Arrow-batched stages (`pandas_udf`), never as a row-at-a-time Python
 UDF in the plan. At 100 TB this stage is embarrassingly parallel
 (narrow map over the page scan, zero shuffle), so throughput scales
 with cores exactly like the flagship extraction (BENCH.md scaling
-runs); the per-doc Python cost is the irreducible tokenizer cost every
-CC pipeline pays (trafilatura/resiliparse are the same shape).
+runs). The per-doc Python cost is kept to about one C-level regex
+match per construct on simple markup: `_fused_feed` matches the text
+run and a whole "simple" tag (lowercase name, valueless or quoted
+attributes, ``>`` or ``/>``) — or a comment, doctype or script/style
+element — in one ``_SIMPLE_TOKEN`` match and applies the extractor's
+handlers inline. Any other construct (uppercase names, unquoted
+values, ...) takes the per-tag tolerant walk, the stdlib's own tag
+regexes with the Untame conditions of `functions/structscan.py`,
+which costs what it did before the simple token existed plus that
+token's failed match (a page of such tags runs ~15% slower than with
+the walk alone); a page outside the tame subset raises ``Untame`` and
+re-runs through the stdlib ``HTMLParser``. Both paths give the stdlib's result (differential fuzz
+in tests/test_structscan.py).
 
 The extractor is deliberately lossless-structural, not a boilerplate
 classifier: nav/footer text is kept (downstream quality scoring —
@@ -36,11 +47,21 @@ cheap and model-replaceable).
 
 from __future__ import annotations
 
-from html.parser import HTMLParser
+import re
+from html import unescape
+from html.parser import (
+    HTMLParser,
+    attrfind_tolerant,
+    commentclose,
+    locatestarttagend_tolerant,
+    tagfind_tolerant,
+)
 
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
+
+from .structscan import _CDATA_CLOSE, _ENDTAG_RE, Untame, _dispatch, _parse_starttag
 
 # Subtrees whose text content is never part of the extracted text.
 _SKIP_TAGS = frozenset({"script", "style", "noscript", "template", "svg"})
@@ -158,7 +179,7 @@ class _TextExtractor(HTMLParser):
             line = " ".join("".join(self._parts).split())
             if line:
                 self._blocks.append((self._stack[-1] if self._stack else None, line))
-            self._parts = []
+            self._parts.clear()
 
     def _flush_anchor(self) -> None:
         if self._a_href is not None:
@@ -166,7 +187,7 @@ class _TextExtractor(HTMLParser):
                 (self._a_href, " ".join("".join(self._a_parts).split()))
             )
         self._a_href = None
-        self._a_parts = []
+        self._a_parts.clear()
 
     def text(self) -> str:
         self._flush_line()
@@ -197,175 +218,227 @@ def extract_text_rich_py(html: bytes | str | None) -> str:
 # Kernel selector, same contract as functions/structparse.KERNEL:
 # "scan" drives _TextExtractor with the FUSED tame tokenizer below
 # (equivalence-or-fallback, differential-tested) and re-runs the stdlib
-# walk on any surprise; "full" pins the stdlib walk.
+# walk when it raises Untame; "full" pins the stdlib walk.
 KERNEL = "scan"
 
-# Start tags whose ATTRIBUTES the extractor reads (href / name+content)
-# or whose parse has side machinery (skip-subtree gate, script/style
-# CDATA jump): these go through the full tolerant attr parse. Block
-# tags need only flush+stack (attrs ignored); every other tag
-# (b/i/em/span/strong/code/...) is a handler no-op.
+# The simple-tag token: the text run up to the next '<', then (when it
+# is one) a whole "simple" construct in the same C-level match:
+#   * an inert construct (group 2), which leaves the extractor's state
+#     as it was: a comment (the stdlib's own comment closer), a doctype
+#     without quotes or '[' (first '>' ends it), or a whole script/style
+#     element with simple attributes, whose raw text runs to the
+#     stdlib's CDATA closer (the start tag opens the skip gate, the
+#     closer shuts it again);
+#   * a start tag (groups 3-5) with a lowercase ASCII name and only
+#     whitespace-separated ``name`` / ``name="v"`` / ``name='v'``
+#     attributes (no '<' or newline inside a value), closed by ``>`` or
+#     ``/>``;
+#   * an end tag (group 6) with a lowercase ASCII name (the stdlib's own
+#     ``endtagfind`` pattern, narrowed to lowercase).
+# Over that subset the stdlib's tolerant start-tag grammar
+# (locatestarttagend_tolerant / tagfind_tolerant / attrfind_tolerant)
+# splits the tag the same way: the name ends at whitespace, '/' or '>'
+# (none of them name characters), every attribute follows whitespace
+# (the attrfind lookbehind), a quoted value ends at its first closing
+# quote in both grammars, and the ``/`` of a ``/>`` is never part of an
+# attribute, so it makes a handle_startendtag exactly when the stdlib's
+# does. Anything else leaves groups 2-6 empty: the token then ends at
+# the '<' and the per-tag tolerant walk takes that construct.
+_WS = r"[ \t\n\r\f]"
+_ATTR_NAME = r"[a-zA-Z_:][-.:_a-zA-Z0-9]*"
+_ATTR_VALUE = r"""=(?:"[^"<\n]*"|'[^'<\n]*')"""
+_SIMPLE_ATTR = rf"{_ATTR_NAME}(?:{_ATTR_VALUE})?"
+_SIMPLE_ATTR_LIST = rf"(?:{_WS}+{_SIMPLE_ATTR})*"
+_INERT = "|".join(
+    [
+        r"<!--(?s:.*?)" + commentclose.pattern,
+        r"""<![dD][oO][cC][tT][yY][pP][eE][^>'"\[]*>""",
+    ]
+    + [
+        rf"<{name}{_SIMPLE_ATTR_LIST}{_WS}*>(?s:.*?){closer.pattern}"
+        for name, closer in _CDATA_CLOSE.items()
+    ]
+)
+_SIMPLE_TOKEN = re.compile(
+    rf"([^<]*)(?:({_INERT})"
+    rf"|<([a-z][-.:_a-z0-9]*)({_SIMPLE_ATTR_LIST}){_WS}*(/?)>"
+    r"|</\s*([a-z][-.:_a-z0-9]*)\s*>)?"
+)
+# the same attribute grammar, to read a simple tag's attributes: (name,
+# '="value"' / "='value'" / '' when the attribute has no value)
+_SIMPLE_ATTRS = re.compile(rf"({_ATTR_NAME})({_ATTR_VALUE})?")
+
+
+def _attr_value(eq_quoted: str) -> str:
+    """'="v"' → v with character references decoded, as the stdlib's
+    attribute parse does."""
+    v = eq_quoted[2:-1]
+    return unescape(v) if "&" in v else v
+
+
+# start tags whose attributes or CDATA content the extractor reads, and
+# end tags that change its state; every other tag is inert for it
 _NEEDS_ATTRS = _SKIP_TAGS | {"a", "meta"}
 _INTERESTING_END = _SKIP_TAGS | _BLOCK_TAGS | {"a"}
 
 
-def _fused_feed(p: _TextExtractor, s: str, low: str) -> None:
+def _fused_feed(p: _TextExtractor, s: str) -> None:
     """Fused tokenizer+extractor drive of ``p`` over ``s`` (the
     rich-extract kernel ceiling): identical final state to ``p.feed(s);
     p.close()`` on any input it completes (differential fuzz + corpus
     tests in tests/test_structscan.py), ``Untame`` on anything outside
     the tame subset (caller re-runs the stdlib walk).
 
-    Versus the generic ``structscan.feed_events`` event mirror, this
-    exploits what the HANDLER ignores, inlining the construct loop so
-    each tag costs one locate + one name match and only the constructs
-    that matter pay more:
+    Each step is ONE ``_SIMPLE_TOKEN`` match: the text run to the next
+    '<' plus, when the construct there is simple, the whole construct
+    (a start tag with its attributes and ``>``/``/>``, an end tag, or an
+    inert comment/doctype/script/style element). The handlers' effects
+    are inlined:
 
-      * block tags flush/push inline — their attributes are validated
-        (same tolerant walk, same Untame junk condition as the stdlib
-        mirror) but never materialized, unescaped, or dispatched;
-      * inert inline tags validate and skip — no handler call;
-      * inert end tags are a set-lookup no-op;
-      * text runs append inline (per-run ``&`` unescape preserved — an
-        entity can never span runs because runs are tag-delimited, and
-        the stdlib never decodes an entity interrupted by a tag);
-      * only ``a``/``meta``/skip-subtree tags take the full attribute
-        parse, via the SAME mirror as the struct scanner
-        (structscan._parse_starttag), so attribute semantics are
-        identical by construction."""
-    from html import unescape
-    from html.parser import (
-        attrfind_tolerant,
-        locatestarttagend_tolerant,
-        tagfind_tolerant,
-    )
+      * text runs append to the open line (and an open anchor) with
+        per-run ``&`` unescape — an entity can never span runs because
+        runs are tag-delimited, and the stdlib never decodes an entity
+        interrupted by a tag; a whitespace-only run that would start a
+        line is dropped, since the line's split() strips it anyway;
+      * block start/end tags flush the line and push/unwind the
+        container stack; their attributes are matched, never built;
+      * skip-subtree tags move the skip gate (script/style elements are
+        inert tokens: their gate opens and closes within the element);
+      * ``a`` opens an anchor at its first ``href`` and ``meta`` records
+        its name/content pair, reading attributes with one ``findall``
+        over the matched attribute text;
+      * inert inline tags (b/i/span/...) and their end tags are no-ops.
 
-    from .structscan import (
-        _CDATA_CLOSE,
-        _ENDTAG_RE,
-        _parse_markup_misc,
-        Untame,
-    )
-
+    A construct the simple token rejects (uppercase name, unquoted or
+    spaced ``=`` value, '<' or newline inside a quoted value, '/' junk,
+    a tag cut off at EOF, an unclosed comment, a doctype with quotes,
+    PIs and bogus comments, bare '<' data) takes the per-tag tolerant
+    walk: the stdlib's own locate, name and attribute regexes with the
+    struct scanner's Untame conditions. Like the simple path, it only
+    pays for what the extractor reads: an inert or block start tag has
+    its attributes validated, never built (a block tag flushes the line
+    inline), an end tag reaches ``handle_endtag`` only when it can
+    change state, and ``a``/``meta``/skip-subtree tags and every other
+    construct go through ``structscan._parse_starttag`` /
+    ``structscan._dispatch`` with the real handlers. So the two paths
+    share one equivalence-or-Untame contract, and a page of rejected
+    tags costs one failed construct match per tag more than the walk
+    alone."""
     n = len(s)
     i = 0
-    find = s.find
-    blocks, voids, needs = _BLOCK_TAGS, _VOID_BLOCKS, _NEEDS_ATTRS
+    token, endtag = _SIMPLE_TOKEN.match, _ENDTAG_RE.match
+    locate, tagname = locatestarttagend_tolerant.match, tagfind_tolerant.match
+    attrfind = attrfind_tolerant.match
+    needs_attrs, interesting_end = _NEEDS_ATTRS, _INTERESTING_END
+    blocks, voids = _BLOCK_TAGS, _VOID_BLOCKS
+    # the handlers clear these lists in place, so the aliases stay valid
+    parts, a_parts, stack, lines = p._parts, p._a_parts, p._stack, p._blocks
     while i < n:
-        nxt = find("<", i)
-        if nxt != i:
-            chunk = s[i:] if nxt < 0 else s[i:nxt]
-            # handle_data inlined: skipped subtrees drop data; anchors
-            # accumulate their own run copy
-            if not p._skip:
-                if "&" in chunk:
-                    chunk = unescape(chunk)
-                p._parts.append(chunk)
-                if p._a_href is not None:
-                    p._a_parts.append(chunk)
-            if nxt < 0:
-                return
-            i = nxt
-        c = s[i + 1 : i + 2]
-        if c and c.isalpha():
-            lm = locatestarttagend_tolerant.match(s, i)
-            e = lm.end()
-            nxt2 = s[e : e + 1]
-            if nxt2 == ">":
-                tag_end = e + 1
-                startend = False
-            elif nxt2 == "/" and s[e : e + 2] == "/>":
-                tag_end = e + 2
-                startend = True
-            else:
-                raise Untame("junk between attributes and '>'")
-            tm = tagfind_tolerant.match(s, i + 1)
-            tag = tm.group(1).lower()
-            if tag in needs:
-                # full attr parse (a/meta read values; skip tags gate
-                # subtrees + script/style CDATA) — the same tolerant
-                # walk as structscan._parse_starttag, reusing the
-                # locate/tagfind matches already in hand
-                k = tm.end()
-                attrs = []
-                while k < e:
-                    am = attrfind_tolerant.match(s, k)
-                    if am is None:
-                        break
-                    attrname, rest, attrvalue = am.group(1, 2, 3)
-                    if not rest:
-                        attrvalue = None
-                    elif (
-                        attrvalue[:1] == "'" == attrvalue[-1:]
-                        or attrvalue[:1] == '"' == attrvalue[-1:]
-                    ):
-                        attrvalue = attrvalue[1:-1]
-                    if attrvalue:
-                        attrvalue = unescape(attrvalue)
-                    attrs.append((attrname.lower(), attrvalue))
-                    k = am.end()
-                if s[k:e].strip():
-                    raise Untame("unparsed attribute junk")
-                if startend:
-                    p.handle_startendtag(tag, attrs)
-                    i = tag_end
-                    continue
-                p.handle_starttag(tag, attrs)
-                if tag in ("script", "style"):
-                    # stdlib CDATA mode: raw content to the closer; an
-                    # unclosed script buffers forever in the stdlib, so
-                    # nothing is emitted — mirror by jumping to EOF
-                    cm = _CDATA_CLOSE[tag].search(low, tag_end)
-                    if cm is None:
-                        return
-                    p.handle_data(s[tag_end : cm.start()])
-                    p.handle_endtag(tag)
-                    i = cm.end()
-                    continue
-                i = tag_end
-                continue
-            k = tm.end()
-            if k < e:
-                # attr region present: validate it exactly as the
-                # mirror does (junk → Untame) without materializing
-                while k < e:
-                    am = attrfind_tolerant.match(s, k)
-                    if am is None:
-                        break
-                    k = am.end()
-                if s[k:e].strip():
-                    raise Untame("unparsed attribute junk")
-            if tag in blocks and not p._skip:
-                # handle_starttag/_startendtag inlined for blocks
-                if p._parts:
-                    line = " ".join("".join(p._parts).split())
-                    if line:
-                        p._blocks.append(
-                            (p._stack[-1] if p._stack else None, line)
-                        )
-                    p._parts = []
-                if not startend and tag not in voids:
-                    p._stack.append(tag)
-            i = tag_end
-            continue
-        if c == "/":
-            em = _ENDTAG_RE.match(s, i)
-            if em is None:
-                raise Untame("malformed end tag")
-            tag = em.group(1).lower()
-            if tag in _INTERESTING_END:
-                p.handle_endtag(tag)
-            i = em.end()
-            continue
-        if c in ("!", "?"):
-            i = _parse_markup_misc(p, s, low, i)
-            continue
-        # '<' + EOF or non-name char: plain data in the stdlib parser
-        if not p._skip:
-            p._parts.append("<")
+        m = token(s, i)
+        text, inert, tag, attr_text, slash, etag = m.groups()
+        i = m.end()
+        # a whitespace-only run that would open a line or anchor text is
+        # dropped: the flush's split() would strip it anyway
+        if text and not p._skip and (parts or a_parts or not text.isspace()):
+            if "&" in text:
+                text = unescape(text)
+            parts.append(text)
             if p._a_href is not None:
-                p._a_parts.append("<")
-        i += 1
+                a_parts.append(text)
+        if tag is not None:
+            if tag in blocks:
+                if not p._skip:
+                    if parts:
+                        line = " ".join("".join(parts).split())
+                        if line:
+                            lines.append((stack[-1] if stack else None, line))
+                        parts.clear()
+                    if not slash and tag not in voids:
+                        stack.append(tag)
+            elif tag in _SKIP_TAGS:
+                # a self-closed skip tag is a handle_startendtag no-op
+                if not slash:
+                    if tag in _CDATA_CLOSE:
+                        # a script/style the inert group did not take has
+                        # no closer: the stdlib buffers the rest forever
+                        return
+                    p._skip += 1
+            elif tag == "a":
+                # a new <a> closes a dangling one and opens an anchor at
+                # its first href that has a value; <a/> is a no-op
+                if not slash and not p._skip:
+                    if p._a_href is not None:
+                        p._flush_anchor()
+                    for k, v in _SIMPLE_ATTRS.findall(attr_text):
+                        if k.lower() == "href":
+                            if v:
+                                p._a_href = _attr_value(v)
+                            break
+            elif tag == "meta":
+                if not p._skip:
+                    kv = {k.lower(): v for k, v in _SIMPLE_ATTRS.findall(attr_text)}
+                    name, content = kv.get("name"), kv.get("content")
+                    if name and content:  # both present, both with a value
+                        p._metas.append((_attr_value(name), _attr_value(content)))
+        elif etag is not None:
+            if etag in blocks:
+                if not p._skip:
+                    if parts:
+                        line = " ".join("".join(parts).split())
+                        if line:
+                            lines.append((stack[-1] if stack else None, line))
+                        parts.clear()
+                    if etag in stack:
+                        while stack and stack.pop() != etag:
+                            pass
+            elif etag in _SKIP_TAGS:
+                if p._skip:
+                    p._skip -= 1
+            elif etag == "a" and p._a_href is not None and not p._skip:
+                p._flush_anchor()
+        elif inert is None and i < n:
+            # a construct the simple token rejects: the per-tag walk,
+            # which only pays for handlers on the tags the extractor reads
+            c = s[i + 1 : i + 2]
+            if c.isascii() and c.isalpha():
+                lm = locate(s, i)
+                e = lm.end()
+                if s[e : e + 1] == ">":
+                    end = e + 1
+                elif s[e : e + 2] == "/>":
+                    end = e + 2
+                else:
+                    raise Untame("junk between attributes and '>'")
+                tm = tagname(s, i + 1)
+                tag = tm.group(1).lower()
+                if tag in needs_attrs:
+                    i = _parse_starttag(p, s, i)
+                    continue
+                # an inert or block tag: attributes validated, not built
+                k = tm.end()
+                while k < end:
+                    am = attrfind(s, k)
+                    if am is None:
+                        break
+                    k = am.end()
+                rest = s[k:end].strip()
+                if rest != ">" and rest != "/>":
+                    raise Untame("unparsed attribute junk")
+                i = end
+                if tag in blocks and not p._skip:
+                    p._flush_line()
+                    if rest == ">" and tag not in voids:
+                        stack.append(tag)
+            elif c == "/":
+                em = endtag(s, i)
+                if em is None:
+                    raise Untame("malformed end tag")
+                i = em.end()
+                etag = em.group(1).lower()
+                if etag in interesting_end:
+                    p.handle_endtag(etag)
+            else:
+                i = _dispatch(p, s, i)
 
 
 def _parse(html: bytes | str | None) -> _TextExtractor:
@@ -375,13 +448,13 @@ def _parse(html: bytes | str | None) -> _TextExtractor:
     if isinstance(html, (bytes, bytearray, memoryview)):
         html = bytes(html).decode("utf-8", errors="replace")
     if KERNEL == "scan":
-        from .structscan import _ASCII_LOWER
-
         try:
-            _fused_feed(parser, html, html.translate(_ASCII_LOWER))
+            _fused_feed(parser, html)
             return parser
-        except Exception:
-            parser = _TextExtractor()  # Untame/surprise: stdlib decides
+        except Untame:
+            # outside the tame subset: the stdlib walk decides. Any
+            # other exception is a scanner bug and propagates.
+            parser = _TextExtractor()
     try:
         parser.feed(html)
         parser.close()

@@ -437,8 +437,10 @@ def _run_parser(html: str) -> "_StructParser":
             structscan.scan_structdata(parser, html)
             parser.finalize()
             return parser
-        except Exception:
-            pass  # Untame or any scanner surprise: full parse decides
+        except structscan.Untame:
+            # outside the tame subset: the full parse decides. Any other
+            # exception is a scanner bug and propagates.
+            pass
     parser = _StructParser()
     try:
         parser.feed(html)

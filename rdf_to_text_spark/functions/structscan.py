@@ -94,14 +94,19 @@ _NEEDLES = (
 # rows an infobox emits (tag-soup cases fuzz-verified).
 
 _ENDTAG_RE = re.compile(r"</\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>")
-# searched over the lowered copy, so no IGNORECASE needed
+# searched over the page itself, with ASCII-only case folding spelled
+# out: re.IGNORECASE would also fold non-ASCII look-alikes (U+017F LONG
+# S matches 's'), and such a closer never ends the element in the
+# stdlib, whose end-tag name pattern is ASCII
 _CDATA_CLOSE = {
-    "script": re.compile(r"</\s*script\s*>"),
-    "style": re.compile(r"</\s*style\s*>"),
+    name: re.compile(
+        r"</\s*" + "".join(f"[{c}{c.upper()}]" for c in name) + r"\s*>"
+    )
+    for name in ("script", "style")
 }
 
 
-def _parse_starttag(p, s: str, low: str, i: int) -> int:
+def _parse_starttag(p, s: str, i: int) -> int:
     """Mirror of HTMLParser.parse_starttag over the tame subset; drives
     p.handle_starttag / p.handle_startendtag; returns the scan position
     after the tag. Raises Untame on anything parse_starttag would have
@@ -113,10 +118,8 @@ def _parse_starttag(p, s: str, low: str, i: int) -> int:
     nxt = s[j : j + 1]
     if nxt == ">":
         end = j + 1
-        startend = False
     elif nxt == "/" and s[j : j + 2] == "/>":
         end = j + 2
-        startend = True
     else:
         raise Untame("junk between attributes and '>'")
     tm = tagfind_tolerant.match(s, i + 1)
@@ -124,8 +127,7 @@ def _parse_starttag(p, s: str, low: str, i: int) -> int:
     k = tm.end()
     tag = tm.group(1).lower()
     attrs = []
-    limit = end - (2 if startend else 1)
-    while k < limit:
+    while k < end:
         am = attrfind_tolerant.match(s, k)
         if am is None:
             break
@@ -141,9 +143,12 @@ def _parse_starttag(p, s: str, low: str, i: int) -> int:
             attrvalue = unescape(attrvalue)
         attrs.append((attrname.lower(), attrvalue))
         k = am.end()
-    if s[k:limit].strip():
+    # what is left decides, as in the stdlib: a '/' that the locate
+    # regex swallowed ('<BR/>') still makes the tag self-closing
+    rest = s[k:end].strip()
+    if rest != ">" and rest != "/>":
         raise Untame("unparsed attribute junk")
-    if startend:
+    if rest == "/>":
         p.handle_startendtag(tag, attrs)
         return end
     p.handle_starttag(tag, attrs)
@@ -151,7 +156,7 @@ def _parse_starttag(p, s: str, low: str, i: int) -> int:
         # stdlib CDATA mode: raw (un-unescaped) content to the closer,
         # no tag events inside; handle_data applies the same capture/
         # suppression rules either way
-        cm = _CDATA_CLOSE[tag].search(low, end)
+        cm = _CDATA_CLOSE[tag].search(s, end)
         if cm is None:
             # no closer: the stdlib parser BUFFERS forever (goahead
             # breaks on a missing CDATA closer even at close()), so the
@@ -164,7 +169,7 @@ def _parse_starttag(p, s: str, low: str, i: int) -> int:
     return end
 
 
-def _parse_markup_misc(p, s: str, low: str, i: int) -> int:
+def _parse_markup_misc(p, s: str, i: int) -> int:
     """Comments, declarations, PIs — all inert for _StructParser (none
     of its handle_comment/decl/pi hooks are overridden), so the tame
     mirror only has to SKIP the same span HTMLParser would consume."""
@@ -185,7 +190,7 @@ def _parse_markup_misc(p, s: str, low: str, i: int) -> int:
         j = s.find(">", i + 2)
         if j < 0:
             raise Untame("unterminated declaration")
-        if low.startswith("<!doctype", i, i + 9):
+        if s[i + 2 : i + 9].translate(_ASCII_LOWER) == "doctype":
             # internal subsets can quote '>', which the stdlib decl
             # parser honors but first-'>' does not — stay tame
             seg = s[i:j]
@@ -205,12 +210,19 @@ def _idle(p) -> bool:
     )
 
 
-def _dispatch(p, s: str, low: str, i: int) -> int:
+def _starttag_char(c: str) -> bool:
+    """Whether '<' + ``c`` opens a start tag: the stdlib's
+    ``starttagopen`` (``<[a-zA-Z]``). A non-ASCII letter (``<é``) is
+    '<' data there, and str.isalpha() alone would accept it."""
+    return c.isascii() and c.isalpha()
+
+
+def _dispatch(p, s: str, i: int) -> int:
     """One '<'-anchored construct through the handlers; returns the
     position after it. Mirrors goahead's branch order."""
     c = s[i + 1 : i + 2]
-    if c and c.isalpha():
-        return _parse_starttag(p, s, low, i)
+    if _starttag_char(c):
+        return _parse_starttag(p, s, i)
     if c == "/":
         em = _ENDTAG_RE.match(s, i)
         if em is None:
@@ -218,13 +230,13 @@ def _dispatch(p, s: str, low: str, i: int) -> int:
         p.handle_endtag(em.group(1).lower())
         return em.end()
     if c in ("!", "?"):
-        return _parse_markup_misc(p, s, low, i)
+        return _parse_markup_misc(p, s, i)
     # '<' + EOF or non-name char: plain data in the stdlib parser
     p.handle_data("<")
     return i + 1
 
 
-def _classify_bare_needle(p, s: str, low: str, i: int, j: int) -> int:
+def _classify_bare_needle(p, s: str, i: int, j: int) -> int:
     """Classify a bare literal needle (``itemscope``/``infobox``) at
     ``j`` by walking constructs FORWARD from the known-clean scan
     position ``i`` — the exact mirror of what the stdlib parser would
@@ -250,10 +262,9 @@ def _classify_bare_needle(p, s: str, low: str, i: int, j: int) -> int:
         if k < 0:
             return j + 1  # needle is plain text
         c = s[k + 1 : k + 2]
-        if c and c.isalpha():
-            lm = locatestarttagend_tolerant.match(s, k)
-            # '<' + alpha always matches at least the tag name
-            e = lm.end()
+        if _starttag_char(c):
+            # '<' + ASCII letter always matches at least the tag name
+            e = locatestarttagend_tolerant.match(s, k).end()
             nxt = s[e : e + 1]
             if nxt == ">":
                 tag_end = e + 1
@@ -263,7 +274,7 @@ def _classify_bare_needle(p, s: str, low: str, i: int, j: int) -> int:
                 raise Untame("junk between attributes and '>'")
             if e > j:
                 # the needle sits inside this tag: parse it for real
-                return _parse_starttag(p, s, low, k)
+                return _parse_starttag(p, s, k)
             if tag_end > j:
                 return tag_end  # unreachable (terminator is '>'/'/>')
             pos = tag_end
@@ -329,9 +340,9 @@ def scan_structdata(p, s: str) -> None:
             if j < 0:
                 return  # nothing state-relevant remains
             if low[j] != "<":  # bare 'itemscope'/'infobox' literal
-                i = _classify_bare_needle(p, s, low, i, j)
+                i = _classify_bare_needle(p, s, i, j)
                 continue
-            i = _dispatch(p, s, low, j)
+            i = _dispatch(p, s, j)
             continue
         # EVENT state: text to the next '<' goes through the handlers
         nxt = s.find("<", i)
@@ -348,7 +359,7 @@ def scan_structdata(p, s: str) -> None:
             p.handle_data(chunk)
             i = nxt
             continue
-        i = _dispatch(p, s, low, i)
+        i = _dispatch(p, s, i)
 
 
 def feed_events(p, s: str) -> None:
@@ -362,7 +373,6 @@ def feed_events(p, s: str) -> None:
     exactly (differential tests in tests/test_structscan.py); anything
     non-tame raises and the caller re-runs the stdlib path."""
     n = len(s)
-    low = s.translate(_ASCII_LOWER)
     i = 0
     while i < n:
         nxt = s.find("<", i)
@@ -379,4 +389,4 @@ def feed_events(p, s: str) -> None:
             p.handle_data(chunk)
             i = nxt
             continue
-        i = _dispatch(p, s, low, i)
+        i = _dispatch(p, s, i)

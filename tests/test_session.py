@@ -76,9 +76,9 @@ def test_local_frame_rejects_rows_of_the_wrong_width(spark):
 
 
 def test_no_list_built_frames_outside_local_frame():
-    """Every driver-side frame of the package and its jobs goes through
-    `local_frame`; a `createDataFrame(` anywhere else is a Python RDD
-    scan with its own worker pool."""
+    """Every driver-side frame of the package, its jobs and the repo-root
+    scripts goes through `local_frame`; a `createDataFrame(` anywhere
+    else is a Python RDD scan with its own worker pool."""
     session = ROOT / "rdf_to_text_spark" / "session.py"
     helper = next(
         node
@@ -86,7 +86,12 @@ def test_no_list_built_frames_outside_local_frame():
         if isinstance(node, ast.FunctionDef) and node.name == "local_frame"
     )
     hits = []
-    for path in sorted([*ROOT.glob("rdf_to_text_spark/**/*.py"), *ROOT.glob("jobs/**/*.py")]):
+    scanned = [
+        *ROOT.glob("rdf_to_text_spark/**/*.py"),
+        *ROOT.glob("jobs/**/*.py"),
+        *ROOT.glob("*.py"),
+    ]
+    for path in sorted(scanned):
         for i, line in enumerate(path.read_text().splitlines(), 1):
             inside = path == session and helper.lineno <= i <= helper.end_lineno
             if "createDataFrame(" in line and not inside:

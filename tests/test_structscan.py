@@ -127,6 +127,15 @@ TAME_CASES = [
     # prose '<' data before a bare-word needle, then a real carrier
     "<p>x</p> a < b itemscope word "
     '<div itemscope itemid="T"><span itemprop="m">n</span></div>',
+    # '<' + a non-ASCII letter is '<' data (the stdlib's starttagopen is
+    # <[a-zA-Z]), also in the idle walk before a bare needle
+    "<p>a <\u00e9 b infobox</p>",
+    "<p>\u4e2d <\u4e2d itemscope</p>"
+    '<div itemscope itemid="N"><span itemprop="k">v</span></div>',
+    # bare self-closing uppercase tags inside an open item: the '/' the
+    # locate regex swallows still makes them self-closing, as in the
+    # stdlib
+    '<div itemscope itemid="S"><BR/><span itemprop="k">v</span><P/></div>',
 ]
 
 
@@ -135,6 +144,15 @@ def test_tame_cases_complete_and_match(html):
     fast = _fast(html)
     assert fast is not None, "expected the fast path to complete"
     assert fast == _full(html)
+
+
+def test_non_ascii_letter_after_lt_is_data(monkeypatch):
+    html = "<p>a <\u00e9 b infobox</p>"
+    got = parse_structdata_py(html)  # the scanner must not raise
+    monkeypatch.setattr(structparse, "KERNEL", "full")
+    assert got == parse_structdata_py(html)
+    assert _fused_views(html) == _full_views(html)
+    assert _full_views(html)["t"] == "a <\u00e9 b infobox"
 
 
 UNTAME_CASES = [
@@ -300,12 +318,11 @@ def test_unclosed_plain_table_shadowing_infobox_equivalence():
 # ------------------------------------------------- htmltext fused kernel
 def _fused_views(html: str) -> dict | None:
     from rdf_to_text_spark.functions import htmltext
-    from rdf_to_text_spark.functions.structscan import _ASCII_LOWER
 
     p = htmltext._TextExtractor()
     try:
-        htmltext._fused_feed(p, html, html.translate(_ASCII_LOWER))
-    except Exception:
+        htmltext._fused_feed(p, html)
+    except Untame:
         return None
     return {"t": p.text(), "b": p.blocks(), "l": p.links(), "m": p.metas()}
 
@@ -316,6 +333,21 @@ def test_fused_feed_rich_corpus_equivalence_and_completion():
         fast = _fused_views(html)
         assert fast is not None, f"doc {d} fell back"  # fixture is tame
         assert fast == _full_views(html), f"doc {d}"
+
+
+def test_fused_feed_loose_markup_corpus_equivalence():
+    # the rich pages with uppercase tag names and unquoted attribute
+    # values: every tag takes the per-tag walk, the page still completes
+    # and every view equals both the stdlib's and the original page's
+    from rdf_to_text_spark.fixtures_web import loosen_markup_py
+
+    for d in range(0, 100):
+        page = render_rich_page_py(d)["html"]
+        html = loosen_markup_py(page).decode()
+        fast, walked = _counted_fused_views(html)
+        assert fast is not None, f"doc {d} fell back"
+        assert walked > 0
+        assert fast == _full_views(html) == _full_views(page.decode()), f"doc {d}"
 
 
 def test_fused_feed_struct_corpus_equivalence():
@@ -348,3 +380,119 @@ def test_fused_feed_fuzz_anchor_meta_attrs(attrs):
     fast = _fused_views(html)
     if fast is not None:
         assert fast == _full_views(html), html[:200]
+
+
+# ------------------------------------- simple-token / per-tag boundary
+# Simple tags take the one-regex path; each family below is rejected by
+# `_SIMPLE_TOKEN` and must go through the per-tag tolerant walk, once
+# per tag, with the same views.
+_SIMPLE_FRAGMENTS = [
+    "<p>", "</p>", "<li class='c'>", "</li>", '<a href="/h?x=1&amp;y=2">',
+    "</a>", "<b>", "</b>", "<br/>", '<meta name="n" content="c">',
+    "<div id=\"d\" hidden>", "</div>", "<span />", "<noscript>",
+    "</noscript>", "<template>", "</template>",
+]
+_TEXT_FRAGMENTS = ["x", " ", "\n", "a &amp; b", "words here", "&copy;"]
+_REJECTED_TAGS = st.one_of(
+    # uppercase names
+    st.sampled_from(
+        ["<P>", "</P>", "<Div>", "<LI>", "<A HREF='/u'>", "</A>",
+         "<META NAME='n' CONTENT='v'>", "<BR>", "<p CLASS=x>",
+         "<BR/>", "<P/>", "<SPAN/>", "<A/>", "<META/>", "<NOSCRIPT/>"]
+    ),
+    # a newline or '<' inside a quoted attribute value
+    st.builds(
+        "<{} title={}>".format,
+        st.sampled_from(["p", "a", "span", "li", "meta"]),
+        st.sampled_from(['"a\nb"', "'x < y'", '"<p"', '"\n"', "'<'"]),
+    ),
+    # unquoted values
+    st.builds(
+        "<{} {}={}>".format,
+        st.sampled_from(["a", "p", "meta", "b"]),
+        st.sampled_from(["href", "name", "content", "id"]),
+        st.sampled_from(["/u", "x&amp;y", "v", "''x"]),
+    ),
+    # '/' junk
+    st.sampled_from(["<p / >", "<div /x>", "<a href='/h' / >", "<br/ >", "<span/junk>"]),
+    # '<' + a non-ASCII letter: '<' data, not a start tag
+    st.sampled_from(["<é", "<中 x", "<ü>"]),
+)
+_boundary_doc = st.lists(
+    st.one_of(
+        st.sampled_from(_SIMPLE_FRAGMENTS).map(lambda f: (f, 0)),
+        st.sampled_from(_TEXT_FRAGMENTS).map(lambda f: (f, 0)),
+        _REJECTED_TAGS.map(lambda f: (f, 1)),
+    ),
+    min_size=1,
+    max_size=40,
+)
+
+
+class _CountingToken:
+    """`_SIMPLE_TOKEN` stand-in that counts the '<' constructs it
+    rejects: the ones `_fused_feed` hands to the per-tag walk."""
+
+    def __init__(self, token):
+        self.token, self.rejected = token, 0
+
+    def match(self, s, i):
+        m = self.token.match(s, i)
+        if m.end() < len(s) and m.group(2, 3, 6) == (None, None, None):
+            self.rejected += 1
+        return m
+
+
+def _counted_fused_views(html: str) -> tuple[dict | None, int]:
+    """Fused views plus how many constructs took the per-tag walk."""
+    from unittest import mock
+
+    from rdf_to_text_spark.functions import htmltext
+
+    token = _CountingToken(htmltext._SIMPLE_TOKEN)
+    with mock.patch.object(htmltext, "_SIMPLE_TOKEN", token):
+        views = _fused_views(html)
+    return views, token.rejected
+
+
+@given(_boundary_doc)
+@settings(max_examples=300, deadline=None)
+def test_fused_feed_simple_and_per_tag_paths_agree(frags):
+    html = "<p>lead</p>" + "".join(f for f, _ in frags)
+    fast, walked = _counted_fused_views(html)
+    assert fast is not None, html
+    assert fast == _full_views(html), html
+    # every rejected tag took the per-tag walk, every other one did not
+    assert walked == sum(rejected for _, rejected in frags), html
+
+
+@given(
+    st.lists(st.sampled_from(_SIMPLE_FRAGMENTS + _TEXT_FRAGMENTS), max_size=20),
+    st.sampled_from(["<a", "<a href='/x'", '<a href="/x', "<a "]),
+)
+@settings(max_examples=150, deadline=None)
+def test_fused_feed_dangling_start_tag_falls_back(frags, dangling):
+    from rdf_to_text_spark.functions import htmltext
+
+    html = "".join(frags) + dangling
+    fast, walked = _counted_fused_views(html)
+    assert fast is None and walked == 1, html  # the walk refuses it
+    assert htmltext.parse_all_py(html) == {
+        k: v for k, v in zip(("text", "blocks", "links", "metas"), _full_views(html).values())
+    }
+
+
+def test_scanner_errors_other_than_untame_propagate(monkeypatch):
+    """A scanner bug must fail loudly, not quietly take the stdlib walk."""
+    from rdf_to_text_spark.functions import htmltext, structscan
+
+    def bug(*args):
+        raise RuntimeError("scanner bug")
+
+    monkeypatch.setattr(htmltext, "_parse_starttag", bug)
+    with pytest.raises(RuntimeError, match="scanner bug"):
+        # <A HREF=/u> takes the per-tag walk's full start-tag parse
+        htmltext.extract_blocks_py("<p>x</p><A HREF=/u>y</A>")
+    monkeypatch.setattr(structscan, "_dispatch", bug)
+    with pytest.raises(RuntimeError, match="scanner bug"):
+        parse_structdata_py('<div itemscope itemid="X"></div>')
