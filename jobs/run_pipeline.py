@@ -244,10 +244,7 @@ def main() -> int:
         )
         packed.write.mode("overwrite").parquet(f"{args.output}/curated_shards")
         for h in cleanup:
-            try:
-                h.unpersist()
-            except Exception:
-                pass
+            h.unpersist()
         cur = spark.read.parquet(f"{args.output}/curated_shards")
         summary["curated_docs"] = cur.count()
         summary["curated_shards"] = cur.select("shard").distinct().count()

@@ -21,7 +21,7 @@ import re
 import numpy as np
 import pandas as pd
 from py4j.protocol import Py4JError
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 # ------------------------------------------------------------------ exact
@@ -117,35 +117,42 @@ def minhash_signatures_md5(
     )
 
 
+def band_bucket_vector(sig: Column, bands: int, rows_per_band: int) -> Column:
+    """array<string> of a signature's `bands` md5 band buckets, in band
+    order: band i hashes its comma-joined slice of `rows_per_band`
+    signature rows, prefixed with "i:", so the bucket is
+    SQL-replayable. The one bucket definition — the batch rung
+    posexplodes it (:func:`band_buckets_md5`) and the streaming
+    candidate generator (streaming/dedup_stream.py) also carries each
+    doc's earlier buckets from it, so both see identical buckets."""
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(bands - 1)),
+        lambda bidx: F.md5(
+            F.concat(
+                bidx.cast("string"),
+                F.lit(":"),
+                F.concat_ws(
+                    ",",
+                    F.slice(sig, bidx * rows_per_band + 1, rows_per_band).cast(
+                        "array<string>"
+                    ),
+                ),
+            )
+        ),
+    )
+
+
 def band_buckets_md5(
     sigs: DataFrame, bands: int, rows_per_band: int, id_col: str = "doc_id"
 ) -> DataFrame:
-    """(id, band, bucket) rows: each signature sliced into `bands`
-    bands of `rows_per_band` rows, each band hashed to one bucket — md5
-    over the band's comma-joined slice prefixed with the band index, so
-    SQL-replayable. Narrow, no shuffle; shared verbatim by the batch LSH
-    join (:func:`minhash_lsh_candidates_md5`) and the streaming
-    candidate generator (streaming/dedup_stream.py), so both see
-    identical buckets."""
+    """(id, band, bucket) rows: :func:`band_bucket_vector` of each
+    signature, posexploded. Narrow, no shuffle; the input of the batch
+    LSH join (:func:`minhash_lsh_candidates_md5`)."""
     return sigs.select(
         id_col,
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda bidx: F.md5(
-                    F.concat(
-                        bidx.cast("string"),
-                        F.lit(":"),
-                        F.concat_ws(
-                            ",",
-                            F.slice(
-                                F.col("sig"), bidx * rows_per_band + 1, rows_per_band
-                            ).cast("array<string>"),
-                        ),
-                    )
-                ),
-            )
-        ).alias("band", "bucket"),
+        F.posexplode(band_bucket_vector(F.col("sig"), bands, rows_per_band)).alias(
+            "band", "bucket"
+        ),
     )
 
 

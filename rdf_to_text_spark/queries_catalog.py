@@ -1263,21 +1263,23 @@ FROM buck a JOIN buck b ON a.band = b.band AND a.bucket = b.bucket
 def dedup_minhash_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL near-dup candidates: the MinHash+LSH rung run as a
     Structured Streaming job (streaming/dedup_stream.py) — documents
-    arrive in micro-batches and each is checked against per-bucket
-    state (applyInPandasWithState keyed on (band, bucket)) instead of a
-    batch self-join. Portable md5 hash family, so the DuckDB oracle
-    replays the ENTIRE streamed candidate set: signatures, banding and
-    the bucket pairing — the same replay as `dedup_minhash_md5_pairs`
-    minus the cap/scoring tail, because the stream emits ids only.
-    Preconditions asserted in-query: ≥2 non-empty micro-batches ran
-    (state genuinely crossed batches) and no bucket exceeded the cap
-    (the prefix-cap vs drop-bucket divergence is unreachable, so
-    stream ≡ batch exactly; max observed bucket on this corpus is 4)."""
+    arrive in micro-batches and each is paired against the buckets
+    already seen by one stream-stream self-join on (band, bucket),
+    which emits each pair once, at its first common band. Portable md5
+    hash family, so the DuckDB oracle replays the ENTIRE streamed
+    candidate set: signatures, banding and the bucket pairing — the
+    same replay as `dedup_minhash_md5_pairs` minus the cap/scoring
+    tail, because the stream emits ids only. The sink is read as is,
+    so a duplicate row fails the oracle match. Preconditions checked
+    in-query: ≥2 non-empty micro-batches ran (state genuinely crossed
+    batches) and the candidate degree proves no bucket exceeded the
+    cap of 128 (`check_bucket_cap`; the max degree is 2-3 at sf0.001
+    to sf0.1), so stream ≡ batch exactly."""
     import shutil
     import tempfile
     import uuid
 
-    from .streaming.dedup_stream import stream_minhash_candidates
+    from .streaming.dedup_stream import check_bucket_cap, stream_minhash_candidates
 
     docs = _docs(spark, sf_dir).filter(F.trim(F.col("text")) != "")
     work = tempfile.mkdtemp(prefix="dedup_stream_drv_")
@@ -1296,32 +1298,18 @@ def dedup_minhash_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{work}/ckpt",
             query_name=qname,
             max_files_per_trigger=n_files // 2,
-            engine="join",
         )
         q.awaitTermination()
-        # the state-crossing claim is about the INGEST (bucket) stage;
-        # the staged wrapper carries its progress on the returned query
-        ingest_progress = getattr(q, "ingest_recent_progress", q.recentProgress)
         n_batches = sum(
-            1 for p in ingest_progress if (p.get("numInputRows") or 0) > 0
+            1 for p in q.recentProgress if (p.get("numInputRows") or 0) > 0
         )
-        pairs = spark.sql(f"SELECT DISTINCT doc_a, doc_b FROM {qname}").toPandas()
+        pairs = spark.table(qname).toPandas()
     finally:
         shutil.rmtree(work, ignore_errors=True)
         spark.catalog.dropTempView(qname)
     if n_batches < 2:
         raise RuntimeError("streamed dedup ran in fewer than 2 micro-batches")
-    from .operators.dedup import band_buckets_md5, minhash_signatures_md5
-
-    max_bucket = (
-        band_buckets_md5(minhash_signatures_md5(docs), 16, 4)
-        .groupBy("band", "bucket")
-        .count()
-        .agg(F.max("count"))
-        .first()[0]
-    )
-    if max_bucket is not None and max_bucket > 128:
-        raise RuntimeError(f"over-cap bucket ({max_bucket}) — stream≡batch precondition broken")
+    check_bucket_cap(pairs, max_bucket=128)
     return local_frame(spark, pairs, "doc_a long, doc_b long")
 
 
