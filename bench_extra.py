@@ -66,7 +66,6 @@ def main() -> None:
             queries_catalog.release_caches()
         out[name] = runs
         spark.sparkContext.setJobDescription(None)
-    queries_catalog.release_caches(evict_session_caches=True)
     print(json.dumps({"sf_dir": args.sf_dir, "noop": args.noop, "runs": out}))
     spark.stop()
 

@@ -42,8 +42,9 @@ def curate_corpus(
     cluster), stratified-sampled, with the inclusive prefix token sum
     ``cum`` in doc_id order (shard = (cum - n_bpe) // budget is left to
     the caller so the packing arithmetic stays visible at the use
-    site). ``cleanup`` receives the persist handles (the repo's
-    release_caches contract)."""
+    site). ``cleanup`` receives the persist handles; the caller
+    unpersists them once the result is materialized (the catalog
+    drains its list with ``queries_catalog.release_caches``)."""
     from ..functions.ranking import global_prefix_sums
     from . import dedup
 

@@ -175,9 +175,14 @@ def test_self_score_pins_anchor_candidate(spark):
 
 
 def test_stopped_session_cache_eviction(spark):
-    """ADVICE r6: entries keyed on a stopped session must be evicted
-    (and their scratch dirs removed) when a new session populates."""
-    import os
+    """The catalog's shared inputs were once session-keyed caches, so a
+    stopped session's entries had to be evicted. They are now fixture
+    dirs keyed by the sf dir's real path and a name: a file belongs to
+    no session, so there is nothing to evict. The test keeps its id and
+    pins what replaced eviction: a second caller with a different,
+    stopped session and the same sf dir gets the same dir back, and its
+    ``write`` never runs."""
+    import uuid
 
     from rdf_to_text_spark import queries_catalog as qc
 
@@ -185,13 +190,18 @@ def test_stopped_session_cache_eviction(spark):
         class sparkContext:
             _jsc = None
 
-    d = __import__("tempfile").mkdtemp(prefix="stream_pages_evict_")
-    os.makedirs(f"{d}/pages", exist_ok=True)
-    qc._STREAM_PAGES_CACHE[(FakeStoppedSession(), "/fake")] = f"{d}/pages"
-    qc._evict_stopped_sessions()
-    assert not any(
-        isinstance(k[0], FakeStoppedSession) for k in qc._STREAM_PAGES_CACHE
-    )
-    assert not os.path.exists(d)
-    # live session entries survive
-    qc._STREAM_PAGES_CACHE.clear()
+    def never(path):
+        raise AssertionError(f"fixture re-written at {path}")
+
+    sf = "/root/testdata/sf0.001"
+    name = f"probe_{uuid.uuid4().hex[:8]}"
+    writes = []
+
+    def write(path):
+        writes.append(path)
+        spark.range(3).write.parquet(path)
+
+    first = qc._fixture(spark, sf, name, write)
+    again = qc._fixture(FakeStoppedSession(), sf + "/", name, never)
+    assert again == first and len(writes) == 1
+    assert spark.read.parquet(again).count() == 3
