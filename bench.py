@@ -241,9 +241,10 @@ def main() -> None:
         ),
         # kg_e2e_crawl: run 1 renders + gzip-writes the WARC fixture,
         # run 2 is the STEADY pipeline number (snapshot → dedup →
-        # resumable sink → CC over the immutable WARC input) — min() reports the steady;
-        # the converged PageRank runs ~10 probe rounds (each a job) so
-        # a second pass buys little signal for ~30 s of window
+        # resumable sink → CC over the immutable WARC input) — min()
+        # reports the steady; the converged PageRank runs ~10 probe
+        # rounds (each a job) so a second pass buys little signal for
+        # ~30 s of window
         {"kg_e2e_crawl": 2, "web_pagerank_converged": 1, "kg_jsonld_stream": 1},
     )
     extras["r6_queries_sec"] = timed(
